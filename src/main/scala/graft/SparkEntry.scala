@@ -49,13 +49,11 @@ object SparkEntry {
   private def tuned(fn: (SparkSession, String) => DataFrame,
                     parallelismFirst: Boolean): (SparkSession, String) => DataFrame =
     (spark, dir) => {
-      // A/B escape hatch (BenchExtra measurements only; the driver never
-      // sets it). The value is set EITHER way — the conf is session-scoped,
-      // so an excluded query must restore Spark's default rather than
-      // inherit the previous catalog call's setting.
-      if (!sys.env.contains("GRAFT_NO_TUNED"))
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-          parallelismFirst.toString)
+      // set EITHER way — the conf is session-scoped, so an excluded query
+      // must restore Spark's default rather than inherit the previous
+      // catalog call's setting
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst",
+        parallelismFirst.toString)
       fn(spark, dir)
     }
 

@@ -100,6 +100,8 @@ object ScalingBench {
       println(f"""{"probe_threads":$t,"gbps":${memBandwidthGbps(t)}%.1f}""")
       return
     }
+    require(argv.length <= 3,
+      "usage: ScalingBench [<cores> [<nDocs> [<repeats>]]] | probe | probeonce <threads>")
     val cores = if (argv.length > 0) argv(0) else "8"
     val nDocs = if (argv.length > 1) argv(1).toLong else 50000L
     val repeats = if (argv.length > 2) argv(2).toInt else 3
@@ -113,16 +115,9 @@ object ScalingBench {
         .write.mode("overwrite").parquet(input)
     }
 
-    // "typed" = Dataset[Doc] encoder path; "native" = the custom
-    // ExtractSpansExec InternalRow path (no encoder round-trip)
-    val mode = if (argv.length > 3) argv(3) else "typed"
-
     def once(): (Double, Long, Long) = {
       val t0 = System.nanoTime()
-      val extracted =
-        if (mode == "native") graft.plans.ExtractSpans.run(spark.read.parquet(input))
-        else Extract.run(spark.read.parquet(input).as[Doc], ExtractConfig.Default).toDF()
-      val res = extracted
+      val res = Extract.run(spark.read.parquet(input).as[Doc], ExtractConfig.Default)
         .select(count(lit(1)).as("docs"), sum(size(col("spans"))).as("spans"))
         .collect()(0)
       val sec = (System.nanoTime() - t0) / 1e9
@@ -131,17 +126,8 @@ object ScalingBench {
 
     once(); once() // warm-ups (JIT, codegen, parquet footers, page cache)
     val runs = (1 to repeats).map { i =>
-      // in-JVM probing is OFF by default (probe_gbps reports -1): the
-      // probe's buffers are humongous G1 allocations and its copy loops
-      // saturate the memory bus right before the timed section — measured
-      // costing the 8-thread leg ~20% (40.7k docs/s with in-run probes vs
-      // 51.6k without, same window). Probe host weather from a separate
-      // JVM instead (`probeonce` mode; tools/scalingbench.sh runs it
-      // before each leg). GRAFT_PROBE=1 re-enables for the A/B.
-      val gbps = if (sys.env.get("GRAFT_PROBE").contains("1")) memBandwidthGbps(cores.toInt)
-                 else -1.0
       val (sec, d, s) = once()
-      println(f"""{"bench":"scaling","cores":$cores,"run":$i,"docs":$d,"spans":$s,"sec":$sec%.3f,"docs_per_sec":${d / sec}%.1f,"spans_per_sec":${s / sec}%.1f,"probe_gbps":$gbps%.1f}""")
+      println(f"""{"bench":"scaling","cores":$cores,"run":$i,"docs":$d,"spans":$s,"sec":$sec%.3f,"docs_per_sec":${d / sec}%.1f,"spans_per_sec":${s / sec}%.1f}""")
       sec -> d
     }
     val best = runs.map(_._1).min

@@ -39,9 +39,6 @@ object Queries {
     */
   private[graft] def resplitForCpu(spark: SparkSession, df: DataFrame,
                                    minBytes: Long = 4L << 20): DataFrame = {
-    // A/B escape hatch for adjacent-window measurements (BenchExtra only;
-    // the driver never sets it)
-    if (sys.env.contains("GRAFT_NO_RESPLIT")) return df
     val target = spark.sparkContext.defaultParallelism
     // probe the split count via this df's own QueryExecution (`toRdd` is the
     // already-planned physical scan, no action) — the round-3 `df.rdd` probe
@@ -1625,12 +1622,6 @@ object Queries {
     * pipeline (same bar as [[ngramJaccard]]'s catalog query).
     */
   val NearDupJaccard = 0.7
-
-  /** BenchExtra-only window into the private verify core (same args as the
-    * [[nearDupKeep]] call site) — diagnostics, not a query surface.
-    */
-  private[graft] def jaccardVerifyProbe(grams: DataFrame, pairs: DataFrame): DataFrame =
-    jaccardVerify(grams, pairs, NearDupJaccard)
 
   /** Stage 3: near-dup canonical selection — MinHash+LSH candidate pairs →
     * exact 3-gram Jaccard VERIFICATION → connected components

@@ -21,12 +21,12 @@ object StreamOps {
     * state partition, and 32 partitions of KB-scale state made the bounded
     * fixtures pay 32 file creates per stateful operator per batch (measured
     * 3.9 s → 2.4 s on the near-dup stream at 4 partitions). Scale-adaptive:
-    * ~1 MB of input per partition, CAPPED at the session's configured
+    * ~4 MB of input per partition, CAPPED at the session's configured
     * `spark.sql.shuffle.partitions` — production volumes hit the cap and
     * keep the operator's configured parallelism.
     */
-  private def streamSession(spark: SparkSession, path: String,
-                            fanout: Int = 1): SparkSession = {
+  private[graft] def streamSession(spark: SparkSession, path: String,
+                                   fanout: Int = 1): SparkSession = {
     val bytes = try {
       val p = new org.apache.hadoop.fs.Path(path)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -37,8 +37,11 @@ object StreamOps {
     // `fanout` = the operator's row multiplication between source and its
     // stateful shuffle (the near-dup stream keys 32 band rows per doc), so
     // the state partitioning is sized to what actually enters the store;
-    // ~4 MB of (fanned-out) input per state partition
-    val n = math.max(1L, (bytes * fanout) >> 22).min(cap.toLong).toInt
+    // ~4 MB of (fanned-out) input per state partition. The product
+    // saturates: an unreadable path reports Long.MaxValue bytes, which must
+    // size to the cap rather than wrap negative and floor at 1.
+    val fanned = if (bytes > Long.MaxValue / fanout) Long.MaxValue else bytes * fanout
+    val n = math.max(1L, fanned >> 22).min(cap.toLong).toInt
     val ss = spark.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", n)
     ss

@@ -12,16 +12,3 @@ object ColumnBridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
   def column(e: Expression): Column = ExpressionUtils.column(e)
 }
-
-/** DataFrame-from-LogicalPlan bridge (`Dataset.ofRows` is `private[sql]`) —
-  * needed to hand a custom logical node to the analyzer.
-  */
-object DatasetBridge {
-  def ofRows(spark: org.apache.spark.sql.SparkSession,
-             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  def logicalPlan(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan
-}

@@ -438,10 +438,19 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("extraction is a narrow plan: no Exchange before the map stage") {
+    import spark.implicits._
     val docs = graft.pipeline.DocsGen.docs(spark, 100, partitions = 4)
     val out = graft.pipeline.Extract.run(docs)
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"extraction must not shuffle:\n$plan")
+    // the production read path: docs read back from parquet stay narrow and
+    // extract to exactly the spans of the in-memory docs
+    val tmp = java.nio.file.Files.createTempDirectory("extractparquet").toString
+    docs.write.mode("overwrite").parquet(tmp)
+    val fromParquet = graft.pipeline.Extract.run(spark.read.parquet(tmp).as[graft.model.Doc])
+    val parquetPlan = fromParquet.queryExecution.executedPlan.toString
+    assert(!parquetPlan.contains("Exchange"), s"extraction must not shuffle:\n$parquetPlan")
+    assert(fromParquet.collect().sortBy(_.doc_id).toSeq == out.collect().sortBy(_.doc_id).toSeq)
   }
 
   test("bloom dedup: history is scan+probe only, confirm join broadcasts") {

@@ -248,6 +248,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(st.updated.get.lastTs == ts("10:00").getTime)
   }
 
+  test("streamSession: an unreadable path with fanout 32 sizes to the cap, not to 1") {
+    val ss = StreamOps.streamSession(spark, "/nonexistent/graft/stream", fanout = 32)
+    assert(ss.conf.get("spark.sql.shuffle.partitions") == "4")
+  }
+
   private class BucketTestState extends org.apache.spark.sql.streaming.GroupState[StreamOps.BucketFirst] {
     var updated: Option[StreamOps.BucketFirst] = None
     var timeoutTs: Long = -1L
