@@ -45,6 +45,12 @@ object SparkEntry {
     * 0.43→0.20 (rollup), 7.3→4.5 (warc_rank), 1.42→1.16 (window_rank) —
     * no query measured slower across repeated runs. Idempotent per call;
     * result plans only change partition counts, never rows.
+    *
+    * Catalog construction owns `coalescePartitions.parallelismFirst`: the
+    * setting stays on the session after the query is built, so anything run
+    * later on that session inherits the last catalog query's posture. The
+    * driver instruments' sessions are fixed, so the posture cannot move to
+    * session creation.
     */
   private def tuned(fn: (SparkSession, String) => DataFrame,
                     parallelismFirst: Boolean): (SparkSession, String) => DataFrame =

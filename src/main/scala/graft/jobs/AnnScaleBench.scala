@@ -1,7 +1,6 @@
 package graft.jobs
 
 import graft.ops.{AnnKMeans, CacheTracker, TopM}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-tier evidence for the ANN family: the trained-quantizer IVF search
@@ -26,17 +25,10 @@ object AnnScaleBench {
     val clusters = args.headOption.map(_.toInt).getOrElse(256)
     val perCluster = args.lift(1).map(_.toInt).getOrElse(625)
     val nq = args.lift(2).map(_.toInt).getOrElse(100)
-    val cpus = args.lift(3).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     // default = the catalog's 25% budget; arg 5 overrides (scan/recall curve)
     val probes = args.lift(4).map(_.toInt).getOrElse(math.max(1, clusters / 4))
     val n = clusters * perCluster
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ExtractJob.session(args.lift(3).getOrElse(ExtractJob.DefaultCores))
 
     val cands = CacheTracker.track(AnnKMeans.candidates(spark, n, perCluster)
       .repartition(spark.sparkContext.defaultParallelism))

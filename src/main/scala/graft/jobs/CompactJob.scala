@@ -213,7 +213,7 @@ object CompactJob {
   def main(argv: Array[String]): Unit = {
     var root = ""
     var targetBytes = 128L << 20
-    var cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    var cores = ExtractJob.DefaultCores
     argv.sliding(2, 2).foreach {
       case Array("--root", v) => root = v
       case Array("--target-bytes", v) => targetBytes = v.toLong
@@ -222,7 +222,6 @@ object CompactJob {
     }
     require(root.nonEmpty, "--root <snapshotRoot> is required")
     val spark = ExtractJob.session(cores)
-    spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     val r = compact(spark, root, targetBytes)
     val sec = (System.nanoTime() - t0) / 1e9

@@ -1,7 +1,6 @@
 package graft.jobs
 
 import graft.sources.Warc
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** N-vs-4N scaling legs for the CRAWL chain (WARC → HTTP unwrap → charset →
@@ -35,16 +34,9 @@ object CrawlScaleBench {
     val pagesPerFile = if (argv.length > 2) argv(2).toInt else 200
     val repeats = if (argv.length > 3) argv(3).toInt else 3
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName("graft-crawl-scale")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.files.maxPartitionBytes", (128 * 1024).toString)
-      .config("spark.sql.files.openCostInBytes", (4 * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ExtractJob.session(cores)
+    spark.conf.set("spark.sql.files.maxPartitionBytes", (128 * 1024).toString)
+    spark.conf.set("spark.sql.files.openCostInBytes", (4 * 1024 * 1024).toString)
     import spark.implicits._
 
     // shared, deterministic, untimed input (the role of the input snapshot)

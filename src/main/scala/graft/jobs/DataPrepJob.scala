@@ -38,7 +38,7 @@ object DataPrepJob {
   final case class Args(
       sfDir: String = "/root/testdata/sf0.001",
       out: String = "/tmp/graft_dataprep",
-      cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+      cores: String = ExtractJob.DefaultCores,
       failAfterStages: Int = -1, // test hook: crash after N stages this RUN
       clock: () => Long = () => System.currentTimeMillis())
 
@@ -125,7 +125,6 @@ object DataPrepJob {
       case other => throw new IllegalArgumentException(other.mkString(" "))
     }
     val spark = ExtractJob.session(args.cores)
-    spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     val stages = run(spark, args)
     val sec = (System.nanoTime() - t0) / 1e9

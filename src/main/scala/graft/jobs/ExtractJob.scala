@@ -46,14 +46,23 @@ object ExtractJob {
       out: String = "/tmp/graft_extract",
       buckets: Int = DefaultBuckets,
       groupSize: Int = 16,
-      cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+      cores: String = DefaultCores,
       failAfterGroups: Int = -1, // test hook: crash BEFORE a group's write
       failAfterWrite: Int = -1, // test hook: crash AFTER a group's write, BEFORE its lineage commit
       expected: Option[String] = None, // prior run's data dir → divergence metric
       clock: () => Long = () => System.currentTimeMillis())
 
-  def session(cores: String): SparkSession =
-    SparkSession.builder()
+  /** Local cores for every main that takes no explicit core count. */
+  val DefaultCores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  /** The one session factory for the library's mains (the driver
+    * instruments `Bench` and `Verify` keep their own fixed sessions). A main
+    * that needs a different posture sets it with `spark.conf.set` right
+    * after this returns; such settings do not reach sessions cloned with
+    * `newSession()` (see `PlanAudit.staticPlan`).
+    */
+  def session(cores: String = DefaultCores): SparkSession = {
+    val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft-extract")
       .config("spark.sql.shuffle.partitions", cores)
@@ -63,6 +72,9 @@ object ExtractJob {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 
   /** Deterministic bucket of one document (stable across runs/partitionings).
     * The DataFrame-side twin is [[graft.functions.ChurroFunctions.bucket_of]]
@@ -237,7 +249,6 @@ object ExtractJob {
       case other => throw new IllegalArgumentException(other.mkString(" "))
     }
     val spark = session(args.cores)
-    spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     val (buckets, docs) = run(spark, args)
     val sec = (System.nanoTime() - t0) / 1e9

@@ -1,7 +1,6 @@
 package graft.jobs
 
 import graft.ops.{CacheTracker, Queries}
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale-tier evidence for the LM quality filter's structural claim
@@ -14,7 +13,7 @@ import org.apache.spark.sql.functions._
   * Setup mirrors the CCNet regime: a [[TrainDocs]]-doc reference slice
   * (CONSTANT across tiers — Wikipedia does not grow when the crawl does)
   * trains the bigram backoff model; the scored corpus is
-  * [[TokenScaleBench.synth]]'s Zipf-headed text at the requested tier
+  * [[BpeScaleBench.synth]]'s Zipf-headed text at the requested tier
   * with a deterministic 1-in-97 out-of-vocabulary gibberish plant
   * (md5-fragment tokens — the wrong-language/binary class the filter
   * drops). Every run REQUIRES the semantic invariant alongside the
@@ -31,23 +30,14 @@ object LmScaleBench {
 
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val cpus = args.lift(1).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ExtractJob.session(args.lift(1).getOrElse(ExtractJob.DefaultCores))
 
     // reference slice: constant size at every tier (ids disjoint from the
     // scored corpus — the model corpus is a separate curated artifact)
-    val train = TokenScaleBench.synth(spark, TrainDocs)
+    val train = BpeScaleBench.synth(spark, TrainDocs)
     // scored corpus: clean tier + 1-in-97 OOV gibberish twins (flagged by
     // the id range, like the catalog query's +600000 plants)
-    val clean = TokenScaleBench.synth(spark, nDocs)
+    val clean = BpeScaleBench.synth(spark, nDocs)
     val plants = clean.filter(col("doc_id") % 97 === 0)
       .select((col("doc_id") + nDocs).as("doc_id"),
         expr("array_join(transform(split(text, ' '), w -> substring(md5(w), 1, 6)), ' ')")

@@ -132,9 +132,7 @@ object OcrScaleBench {
       return
     }
     val nPages = if (args.nonEmpty) args(0).toLong else 5000L
-    val cores = if (args.length > 1) args(1) else sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = ExtractJob.session(cores)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ExtractJob.session(args.lift(1).getOrElse(ExtractJob.DefaultCores))
     run(spark, math.min(nPages, 500L)) // warm-up: JIT the whole chain
     val t0 = System.nanoTime()
     val (pages, lines, chars, bad) = run(spark, nPages)

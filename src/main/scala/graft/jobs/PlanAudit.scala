@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 
 /** Sweep every catalog query's PHYSICAL plan for scale-hostile shapes.
@@ -47,18 +47,22 @@ object PlanAudit {
     plan.collect { case p => p.nodeName }
       .groupBy(identity).map { case (k, v) => k -> v.size }
 
+  /** The STATIC physical plan: AQE off on the session that owns `df`. The
+    * streaming queries build their result on a cloned session
+    * (`StreamOps.streamSession`), which inherits the builder confs but not
+    * the audit session's runtime `conf.set`.
+    */
+  private def staticPlan(df: DataFrame): SparkPlan = {
+    df.sparkSession.conf.set("spark.sql.adaptive.enabled", "false")
+    df.queryExecution.executedPlan
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.filter(_ != "dump").getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      // AQE off: AdaptiveSparkPlanExec has no children pre-execution, so a
-      // tree walk under AQE sees nothing; the audit inspects STATIC shapes
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ExtractJob.session("8")
+    // AQE off: AdaptiveSparkPlanExec has no children pre-execution, so a
+    // tree walk under AQE sees nothing; the audit inspects STATIC shapes
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     // both documented spellings work: `PlanAudit [sfDir] dump <q>` AND
     // `PlanAudit dump <q>` (sfDir optional) — previously the 2-arg form
@@ -69,7 +73,7 @@ object PlanAudit {
       else None
     if (dumpQuery.isDefined) {
       val df = graft.SparkEntry.queries(dumpQuery.get)(spark, sfDir)
-      println(df.queryExecution.executedPlan.toString)
+      println(staticPlan(df).toString)
       graft.ops.Queries.releaseCaches()
       spark.stop()
       return
@@ -78,7 +82,7 @@ object PlanAudit {
     graft.SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val line =
         try {
-          val counts = nodeCounts(fn(spark, sfDir).queryExecution.executedPlan)
+          val counts = nodeCounts(staticPlan(fn(spark, sfDir)))
           val hits = Interesting.flatMap { k =>
             counts.get(k).map(n => s"$k=$n")
           }

@@ -1,28 +1,16 @@
 package graft.jobs
 
-import org.apache.spark.sql.SparkSession
-
 /** Time individual catalog queries by name (cold + warm in one JVM) —
   * the per-query magnifying glass next to `graft.Bench`'s full catalog.
   *
   * `runMain graft.jobs.QueryBench <name> [<name> ...]`; data dir from
-  * SPARK_GRAFT_SF_DIR (default sf0.1), cores from SPARK_GRAFT_CPUS.
+  * SPARK_GRAFT_SF_DIR (default sf0.1), session from [[ExtractJob.session]].
   */
 object QueryBench {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, s"usage: QueryBench <query> ...; known: ${graft.SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ExtractJob.session()
     args.foreach { name =>
       val fn = graft.SparkEntry.queries.getOrElse(name,
         throw new IllegalArgumentException(s"unknown query $name"))

@@ -35,16 +35,7 @@ object RankScaleBench {
   def main(args: Array[String]): Unit = {
     val hosts = args.headOption.map(_.toLong).getOrElse(1000000L)
     val nEdges = args.lift(1).map(_.toLong).getOrElse(4000000L)
-    val cpus = args.lift(2).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ExtractJob.session(args.lift(2).getOrElse(ExtractJob.DefaultCores))
 
     val t0 = System.nanoTime()
     val edges = synthEdges(spark, hosts, nEdges)

@@ -106,7 +106,6 @@ object ScalingBench {
     val nDocs = if (argv.length > 1) argv(1).toLong else 50000L
     val repeats = if (argv.length > 2) argv(2).toInt else 3
     val spark = ExtractJob.session(cores)
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
     val input = s"/tmp/graft_bench_docs_$nDocs"

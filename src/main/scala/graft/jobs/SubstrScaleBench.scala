@@ -1,7 +1,7 @@
 package graft.jobs
 
 import graft.ops.Queries
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** Scale-tier evidence for EXACT-SUBSTRING dedup (the q_substring_dedup
@@ -19,58 +19,10 @@ import org.apache.spark.sql.functions._
   */
 object SubstrScaleBench {
 
-  /** The REJECTED row-local shape, kept for the same-JVM A/B: collect
-    * dup-gram start positions per doc (bounded by doc length), join them
-    * back to the docs frame once, and erase/reassemble with higher-order
-    * functions so no token row ever explodes. Plausible on paper — it
-    * measured 2.2× SLOWER than the shipped explode-distinct shape
-    * ([[Queries.substringDedupFrom]]): HOF lambdas evaluate interpreted
-    * outside whole-stage codegen, erase costs O(len·coverage)
-    * array_contains per doc, and the full words arrays still shuffle to
-    * meet the start lists, while the explode shape's 10× coverage blow-up
-    * collapses in the map-side partial distinct (one doc's positions are
-    * co-located).
-    */
-  private def rowLocalShape(docsIn: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    import graft.ops.CacheTracker
-    val k = Queries.SubstrGramLen
-    val docs = docsIn.select(col("doc_id"), split(col("text"), " ").as("words"))
-    val grams = CacheTracker.track(docs.select(col("doc_id"),
-      posexplode(expr(
-        s"""CASE WHEN size(words) >= $k THEN
-           |  transform(sequence(0, size(words) - $k),
-           |    i -> md5(concat_ws(' ', slice(words, i + 1, $k))))
-           |ELSE CAST(array() AS array<string>) END""".stripMargin))
-        .as(Seq("gpos", "gh"))))
-    val dup = grams.groupBy(col("gh")).agg(count(lit(1)).as("n"))
-      .filter(col("n") > 1).select(col("gh"))
-    val dupStarts = grams.join(dup, Seq("gh"), "left_semi")
-      .groupBy(col("doc_id")).agg(collect_list(col("gpos")).as("starts"))
-    docs.join(dupStarts, Seq("doc_id"), "left")
-      .withColumn("cov", expr(
-        s"""array_distinct(flatten(transform(
-           |  coalesce(starts, CAST(array() AS array<int>)),
-           |  s -> sequence(s, s + ${k - 1}))))""".stripMargin))
-      .select(col("doc_id"), expr(
-        "filter(transform(words, (w, i) -> struct(i AS pos, w AS w)), x -> NOT array_contains(cov, x.pos))")
-        .as("kept"))
-      .filter(size(col("kept")) > 0)
-      .select(col("doc_id"), size(col("kept")).cast("bigint").as("n_kept"),
-        md5(expr("array_join(transform(kept, x -> x.w), ' ')")).as("clean_sha"))
-  }
-
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(500000L)
-    val cpus = args.lift(1).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val cpus = args.lift(1).getOrElse(ExtractJob.DefaultCores)
+    val spark = ExtractJob.session(cpus)
 
     val docs = DedupScaleBench.synth(spark, nDocs)
       .repartition(spark.sparkContext.defaultParallelism)
@@ -82,28 +34,20 @@ object SubstrScaleBench {
     require(nd == nDocs)
     val synthSec = (System.nanoTime() - t0) / 1e9
 
-    // same-JVM A/B: warm both shapes once (JIT/codegen), then time each —
-    // separate-JVM runs on this shared host swing ±40% and can't rank shapes
-    def timed(build: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-        : (Double, org.apache.spark.sql.Row) = {
+    def timed(): (Double, Row) = {
       val t = System.nanoTime()
-      val r = build(docs).agg(
+      val r = Queries.substringDedupFrom(docs).agg(
         count(lit(1)).as("surviving_docs"),
         sum(col("n_kept")).as("tokens_kept")).collect()(0)
       val s = (System.nanoTime() - t) / 1e9
       Queries.releaseCaches()
       (s, r)
     }
-    timed(Queries.substringDedupFrom); timed(rowLocalShape) // warm pass
-    // alternate the timed runs so neither shape owns a position in the JVM
-    val (shipSec1, stats) = timed(Queries.substringDedupFrom)
-    val (rowSec1, rowStats) = timed(rowLocalShape)
-    val (shipSec2, _) = timed(Queries.substringDedupFrom)
-    val (rowSec2, _) = timed(rowLocalShape)
-    val sec = math.min(shipSec1, shipSec2)
-    val rowLocalSec = math.min(rowSec1, rowSec2)
-    require(rowStats.getLong(0) == stats.getLong(0) &&
-      rowStats.getLong(1) == stats.getLong(1), "shapes must agree")
+    timed() // JIT/codegen warm pass
+    val (sec1, stats) = timed()
+    val (sec2, stats2) = timed()
+    require(stats2 == stats, s"repeat pass diverged: $stats2 vs $stats")
+    val sec = math.min(sec1, sec2)
     docs.unpersist()
 
     val surviving = stats.getLong(0)
@@ -113,7 +57,6 @@ object SubstrScaleBench {
       s""""surviving_docs":$surviving,"tokens_total":$tokensTotal,"tokens_kept":$kept,""" +
       s""""synth_sec":${math.round(synthSec * 1000) / 1000.0},""" +
       s""""sec":${math.round(sec * 1000) / 1000.0},""" +
-      s""""row_local_shape_sec":${math.round(rowLocalSec * 1000) / 1000.0},""" +
       s""""docs_per_sec":${math.round(nDocs / sec)},"cores":"$cpus"}""")
     spark.stop()
   }

@@ -3,7 +3,7 @@ package graft.jobs
 import graft.layout.ExtractConfig
 import graft.model.Doc
 import graft.pipeline.{DocsGen, Extract}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 
 /** The reference's `churro-ocr transcribe` CLI surface
   * (`/root/reference/src/churro_ocr/cli.py:163-188,243-250`) over the docs
@@ -34,13 +34,7 @@ object Transcribe {
       case Array("--out", v) => out = Some(v)
       case other => throw new IllegalArgumentException(other.mkString(" "))
     }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ExtractJob.session()
     import spark.implicits._
     val docs: Dataset[Doc] = input match {
       case Some(dir) => spark.read.parquet(dir).as[Doc]

@@ -41,7 +41,7 @@ object WarcIngestJob {
       seed: Long = 42L,
       out: String = "/tmp/graft_warc",
       groupSize: Int = 16,
-      cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+      cores: String = ExtractJob.DefaultCores,
       failAfterGroups: Int = -1, // test hook: crash BEFORE a group's write
       nest: Boolean = true, // publish the docs-shaped snapshot once complete
       clock: () => Long = () => System.currentTimeMillis())
@@ -325,7 +325,6 @@ object WarcIngestJob {
       case other => throw new IllegalArgumentException(other.mkString(" "))
     }
     val spark = ExtractJob.session(args.cores)
-    spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     val (files, pages, errors) = run(spark, args)
     val sec = (System.nanoTime() - t0) / 1e9

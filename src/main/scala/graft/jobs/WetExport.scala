@@ -1,7 +1,7 @@
 package graft.jobs
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** WET export — the crawl-native TEXT sink: a docs-shaped table
@@ -124,7 +124,7 @@ object WetExport {
     var out = "/tmp/graft_wet"
     var snapshot = "latest"
     var files = 8
-    var cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    var cores = ExtractJob.DefaultCores
     argv.sliding(2, 2).foreach {
       case Array("--in", v) => in = v
       case Array("--out", v) => out = v
@@ -135,7 +135,6 @@ object WetExport {
     }
     require(in.nonEmpty, "--in <docsSnapshotRoot> is required")
     val spark = ExtractJob.session(cores)
-    spark.sparkContext.setLogLevel("WARN")
     val id =
       if (snapshot == "latest")
         graft.storage.Snapshots.latest(in)

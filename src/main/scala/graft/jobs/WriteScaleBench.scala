@@ -2,7 +2,7 @@ package graft.jobs
 
 import graft.ops.CacheTracker
 import graft.pipeline.DocsGen
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Write-stage shape adjudication for the north_rule's long-tail-folio
@@ -56,17 +56,8 @@ object WriteScaleBench {
 
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(1000000L)
-    val cpus = args.lift(1).getOrElse(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val groupBuckets = args.lift(2).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = ExtractJob.session(args.lift(1).getOrElse(ExtractJob.DefaultCores))
 
     // one bucket GROUP's spans — the production write unit (the filter
     // runs before the cache so only the group is materialized)

@@ -1018,55 +1018,20 @@ object Queries {
 
   /** The catalog plan: ONE hash join keyed on the token. The Zipf head
     * ("the" ≈ 5% of English instances) skews the probe side of the shuffle,
-    * and the MEASURED adjudication (TokenScaleBench, BENCH.md §8: 500k
-    * docs / 20M tokens, 50% of instances on four tokens, broadcast
-    * disabled) is that AQE's skew-partition splitting handles it — the
-    * naive join beat the belt-and-braces head/tail split by ~40% BECAUSE
-    * the split pays an extra broadcast exchange and union for a skew AQE
-    * was already absorbing. Kept naive on evidence; the split form stays
-    * available below for the regime AQE cannot save (a single probe key
-    * larger than executor spill capacity).
+    * and the MEASURED adjudication (BENCH.md §8: 500k docs / 20M tokens,
+    * 50% of instances on four tokens, broadcast disabled) is that AQE's
+    * skew-partition splitting handles it — the naive join beat a
+    * head/tail split (top tokens broadcast map-side, only the tail through
+    * the hash join) by ~40% BECAUSE the split pays an extra broadcast
+    * exchange and union for a skew AQE was already absorbing. Kept naive
+    * on evidence; a split pays only where AQE cannot save the join (a
+    * single probe key larger than executor spill capacity).
     */
   private[graft] def tokenRarityFrom(docs: DataFrame): DataFrame = {
     val toks = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
     val freq = toks.groupBy(col("w")).agg(count(lit(1)).as("wc"))
     toks.join(freq, "w")
-      .groupBy(col("doc_id"))
-      .agg(sum(col("wc")).as("freq_sum"), count(lit(1)).as("n_tokens"))
-      .select(col("doc_id"), col("freq_sum"), col("n_tokens"),
-        (col("freq_sum").cast("double") / col("n_tokens")).as("mean_token_freq"))
-      .orderBy("doc_id")
-  }
-
-  /** Zipf-head size for [[tokenRaritySplitFrom]]: 1024 head rows broadcast
-    * is trivially small at any corpus scale.
-    */
-  val TokenRarityHeadN = 1024
-
-  /** The head/tail SKEW-SPLIT variant of the rarity aggregation: the top-N
-    * tokens by count join via broadcast (map-side — no shuffle key can
-    * skew), only the misses (tail tokens, bounded counts) go through the
-    * shuffling hash join. Identical result to [[tokenRarityFrom]]
-    * (asserted every TokenScaleBench run). NOT the catalog plan: measured
-    * ~40% slower at the 500k tier because AQE already absorbs the head
-    * (BENCH.md §8) — this form is the escape hatch for a corpus whose
-    * single hottest key exceeds what one task can spill.
-    */
-  private[graft] def tokenRaritySplitFrom(docs: DataFrame): DataFrame = {
-    val toks = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-    // tracked: the frequency table feeds the head derivation AND the tail
-    // join (released by the caller after the action)
-    val freq = tracked(toks.groupBy(col("w")).agg(count(lit(1)).as("wc")))
-    // deterministic head: top-N by count (token tiebreak) — a bounded
-    // TakeOrderedAndProject, never a full sort
-    val head = freq.orderBy(col("wc").desc, col("w").asc).limit(TokenRarityHeadN)
-    val withHead = toks.join(broadcast(head), Seq("w"), "left_outer")
-    val headHits = withHead.filter(col("wc").isNotNull).select(col("doc_id"), col("wc"))
-    val tailHits = withHead.filter(col("wc").isNull).select(col("doc_id"), col("w"))
-      .join(freq, "w").select(col("doc_id"), col("wc"))
-    headHits.unionAll(tailHits)
       .groupBy(col("doc_id"))
       .agg(sum(col("wc")).as("freq_sum"), count(lit(1)).as("n_tokens"))
       .select(col("doc_id"), col("freq_sum"), col("n_tokens"),

@@ -1,96 +1,5 @@
 package graft.pipeline
 
-import graft.model.Span
-import scala.collection.mutable.ArrayBuffer
-
-/** Retry policy for external calls made inside partition tasks.
-  *
-  * Port of `/root/reference/src/churro_ocr/_internal/retry.py:15-39,103-146,
-  * 176-237`: 6 attempts, exponential backoff 1s→16s, Retry-After override,
-  * transient status set {408, 429, 5xx, 52x}, retryable-class/module match,
-  * and a total-time budget that both gates retries and caps each sleep. The
-  * reference wraps async model calls; here the same policy runs inside
-  * `mapPartitions` tasks (Spark task retries cover whole-partition failures).
-  */
-object Retry {
-  val DefaultMaxAttempts = 6
-  val DefaultInitialBackoffSeconds = 1.0
-  val DefaultMaxBackoffSeconds = 16.0
-  val TransientStatusCodes: Set[Int] =
-    Set(408, 429, 500, 502, 503, 504, 520, 521, 522, 524)
-  val RetryableExceptionClassNames: Set[String] = Set(
-    "APIConnectionError", "APITimeoutError", "ClientConnectionError",
-    "ClientConnectorError", "ClientOSError", "ConnectError", "ConnectTimeout",
-    "ConnectionError", "PoolTimeout", "RateLimitError", "ReadTimeout",
-    "RemoteProtocolError", "ServiceRequestError", "ServiceResponseError",
-    "ServerDisconnectedError", "WriteTimeout",
-    // JVM-native transient equivalents
-    "SocketTimeoutException", "ConnectException", "SocketException")
-
-  /** Error shape carrying optional HTTP status / Retry-After metadata. */
-  final case class ApiError(
-      message: String,
-      statusCode: Option[Int] = None,
-      retryAfterSeconds: Option[Double] = None) extends RuntimeException(message)
-
-  def isRetryable(exc: Throwable): Boolean = exc match {
-    case _: java.util.concurrent.TimeoutException => true
-    case _: java.net.SocketTimeoutException => true
-    case _: java.net.ConnectException => true
-    case ApiError(_, Some(status), _) => TransientStatusCodes.contains(status)
-    case e => RetryableExceptionClassNames.contains(e.getClass.getSimpleName)
-  }
-
-  /** `compute_retry_delay_seconds` — Retry-After wins; else capped expo. */
-  def computeRetryDelaySeconds(
-      exc: Throwable,
-      attemptNumber: Int,
-      initialBackoffSeconds: Double = DefaultInitialBackoffSeconds,
-      maxBackoffSeconds: Double = DefaultMaxBackoffSeconds): Double = exc match {
-    case ApiError(_, _, Some(retryAfter)) => retryAfter
-    case _ =>
-      math.min(initialBackoffSeconds * math.pow(2, math.max(0, attemptNumber - 1)),
-        maxBackoffSeconds)
-  }
-
-  /** `retry_api_call` — synchronous executor with the same attempt/budget
-    * semantics (budget gates retrying and caps each individual sleep).
-    */
-  def retryApiCall[T](
-      fn: () => T,
-      maxAttempts: Int = DefaultMaxAttempts,
-      maxTotalSeconds: Option[Double] = None,
-      retryFilter: Throwable => Boolean = isRetryable,
-      initialBackoffSeconds: Double = DefaultInitialBackoffSeconds,
-      maxBackoffSeconds: Double = DefaultMaxBackoffSeconds,
-      sleep: Double => Unit = s => Thread.sleep((s * 1000).toLong),
-      clock: () => Double = () => System.nanoTime() / 1e9): T = {
-    val startedAt = clock()
-    def remainingBudget: Option[Double] =
-      maxTotalSeconds.map(m => math.max(0.0, m - (clock() - startedAt)))
-    var attempt = 1
-    while (true) {
-      try return fn()
-      catch {
-        case e: Throwable =>
-          val budget = remainingBudget
-          val withinBudget = budget.forall(_ > 0)
-          if (attempt >= maxAttempts || !withinBudget || !retryFilter(e)) throw e
-          val delay = computeRetryDelaySeconds(e, attempt, initialBackoffSeconds, maxBackoffSeconds)
-          sleep(budget.fold(delay)(b => math.min(delay, b)))
-          attempt += 1
-      }
-    }
-    throw new AssertionError("unreachable")
-  }
-
-  /** Backoff schedule preview (testing / capacity planning). */
-  def backoffSchedule(maxAttempts: Int = DefaultMaxAttempts,
-                      initial: Double = DefaultInitialBackoffSeconds,
-                      max: Double = DefaultMaxBackoffSeconds): Seq[Double] =
-    (1 until maxAttempts).map(a => math.min(initial * math.pow(2, a - 1), max))
-}
-
 /** Micro-batching for external-call stages (`benchmark.py:377-428`,
   * `hf.py:422-483`): chunk a partition's iterator into fixed-size batches,
   * call the batch function, and re-flatten preserving order. The reference's
@@ -107,38 +16,5 @@ object Batching {
         s"batch fn must be 1:1 (got ${out.length} for ${batch.length})")
       out
     }
-  }
-}
-
-/** Global page reindexing — the reference's fan-out reassembly
-  * (`page_detection.py:239-255,337-352`): per-source candidates keep their
-  * emission order; the document-level `page_index` is a running counter
-  * across sources and `source_index` is the source (e.g. PDF page) ordinal.
-  */
-object Pages {
-  final case class Indexed[A](pageIndex: Int, sourceIndex: Int, value: A)
-
-  def reindex[A](perSource: Seq[Seq[A]]): Vector[Indexed[A]] = {
-    val out = Vector.newBuilder[Indexed[A]]
-    var pageIndex = 0
-    perSource.zipWithIndex.foreach { case (pages, sourceIndex) =>
-      pages.foreach { p =>
-        out += Indexed(pageIndex, sourceIndex, p)
-        pageIndex += 1
-      }
-    }
-    out.result()
-  }
-
-  /** `_crop_bbox` coordinate math (`page_detection.py:376-387`): expand by
-    * `trim_margin`, clamp to the image; Python `int()` truncates.
-    */
-  def cropBBox(bbox: (Double, Double, Double, Double), trimMargin: Int,
-               width: Int, height: Int): (Int, Int, Int, Int) = {
-    val (left, top, right, bottom) = bbox
-    (math.max((left - trimMargin).toInt, 0),
-      math.max((top - trimMargin).toInt, 0),
-      math.min((right + trimMargin).toInt, width),
-      math.min((bottom + trimMargin).toInt, height))
   }
 }

@@ -1,14 +1,13 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import graft.media.ImagePrep
-import graft.pipeline.{Batching, Pages, Retry}
+import graft.media.{ImageDecode, ImagePrep}
+import graft.pipeline.Batching
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Image-prep dimension parity (reference-generated goldens) plus the
-  * orchestration-layer semantics: retry policy, micro-batching, page
-  * reindexing, crop math.
+  * micro-batching semantics and crop math.
   */
 class MediaOrchSpec extends AnyFunSuite {
 
@@ -36,53 +35,6 @@ class MediaOrchSpec extends AnyFunSuite {
   check("chandra")(ImagePrep.chandraDims)
   check("mineru")(ImagePrep.mineruDims(_, _))
 
-  test("retry: backoff schedule 1s→16s capped, 6 attempts") {
-    assert(Retry.backoffSchedule() == Seq(1.0, 2.0, 4.0, 8.0, 16.0))
-  }
-
-  test("retry: Retry-After overrides the exponential delay") {
-    val e = Retry.ApiError("429", Some(429), Some(7.5))
-    assert(Retry.computeRetryDelaySeconds(e, attemptNumber = 4) == 7.5)
-    assert(Retry.computeRetryDelaySeconds(Retry.ApiError("503", Some(503)), 3) == 4.0)
-  }
-
-  test("retry: transient status classification") {
-    Seq(408, 429, 500, 502, 503, 504, 520, 521, 522, 524).foreach(s =>
-      assert(Retry.isRetryable(Retry.ApiError("x", Some(s)))))
-    Seq(400, 401, 403, 404, 422).foreach(s =>
-      assert(!Retry.isRetryable(Retry.ApiError("x", Some(s)))))
-    assert(Retry.isRetryable(new java.util.concurrent.TimeoutException()))
-    assert(!Retry.isRetryable(new IllegalStateException()))
-  }
-
-  test("retry: executor retries transient failures then succeeds; sleeps follow the schedule") {
-    var calls = 0
-    val sleeps = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val result = Retry.retryApiCall(
-      fn = () => { calls += 1; if (calls < 4) throw Retry.ApiError("503", Some(503)) else "ok" },
-      sleep = sleeps.+=(_))
-    assert(result == "ok" && calls == 4)
-    assert(sleeps.toSeq == Seq(1.0, 2.0, 4.0))
-  }
-
-  test("retry: non-retryable propagates immediately; budget stops retrying") {
-    var calls = 0
-    intercept[Retry.ApiError] {
-      Retry.retryApiCall[String](fn = () => { calls += 1; throw Retry.ApiError("bad", Some(400)) },
-        sleep = _ => ())
-    }
-    assert(calls == 1)
-    // budget: virtual clock advances 10s per call → second attempt exceeds 5s budget
-    var now = 0.0
-    var calls2 = 0
-    intercept[Retry.ApiError] {
-      Retry.retryApiCall[String](
-        fn = () => { calls2 += 1; now += 10.0; throw Retry.ApiError("503", Some(503)) },
-        maxTotalSeconds = Some(5.0), sleep = _ => (), clock = () => now)
-    }
-    assert(calls2 == 1)
-  }
-
   test("micro-batching preserves order and batch shape") {
     val out = Batching.mapBatched((1 to 10).iterator, 3)(batch => batch.map(_ * 10)).toVector
     assert(out == (1 to 10).map(_ * 10).toVector)
@@ -91,45 +43,15 @@ class MediaOrchSpec extends AnyFunSuite {
     }
   }
 
-  test("page reindexing: global page_index, per-source source_index") {
-    val indexed = Pages.reindex(Seq(Seq("a", "b"), Seq(), Seq("c")))
-    assert(indexed.map(i => (i.pageIndex, i.sourceIndex, i.value)) ==
-      Vector((0, 0, "a"), (1, 0, "b"), (2, 2, "c")))
-  }
-
   test("crop bbox math: trim margin expansion, clamped (echo-backend case)") {
-    // FIXTURES §3: bbox (5,5,25,25), trim 0 on 40×30 → 20×20 crop
-    assert(Pages.cropBBox((5, 5, 25, 25), 0, 40, 30) == ((5, 5, 25, 25)))
-    assert(Pages.cropBBox((5, 5, 25, 25), 30, 40, 30) == ((0, 0, 40, 30)))
-    assert(Pages.cropBBox((10.9, 10.9, 20.2, 20.2), 1, 100, 100) == ((9, 9, 21, 21)))
-  }
-
-  test("prompt log-once: double-checked gate, base64 previews truncated at 96 (prompt_logging.py:18-85)") {
-    import graft.pipeline.PromptLog
-    import graft.pipeline.PromptLog._
-    PromptLog.reset()
-    val longUri = "data:image/png;base64," + ("A" * 200)
-    val payload = PMap(Seq(
-      "messages" -> PList(Seq(PText("transcribe this"), PText(longUri))),
-      "image" -> PBytes(Array.fill[Byte](300)(7))))
-    var logs = List.empty[String]
-    // 8 racing threads, exactly one log per provider
-    val threads = (1 to 8).map(_ => new Thread(() => {
-      PromptLog.logPromptPayloadOnce(payload, "prov-a", m => logs.synchronized { logs ::= m })
-    }))
-    threads.foreach(_.start()); threads.foreach(_.join())
-    assert(logs.length == 1)
-    val msg = logs.head
-    assert(msg.startsWith("First OCR prompt payload for prov-a:"))
-    // data URI truncated to 96 chars + ellipsis
-    assert(msg.contains("data:image/png;base64," + ("A" * (96 - "data:image/png;base64,".length)) + "..."))
-    assert(!msg.contains("A" * 120))
-    // bytes replaced by a typed preview record
-    assert(msg.contains("\"type\": \"bytes\"") && msg.contains("\"byte_length\": 300"))
-    // a second provider logs independently; same provider never again
-    assert(PromptLog.logPromptPayloadOnce(payload, "prov-b", _ => ()))
-    assert(!PromptLog.logPromptPayloadOnce(payload, "prov-a", _ => ()))
-    // short non-data strings pass through untouched
-    assert(PromptLog.truncateText("short") == "short")
+    // FIXTURES §3: bbox (5,5,25,25), trim 0 on 40×30 → 20×20 crop;
+    // a margin past the image clamps to it; int() truncates 10.9-1 to 9
+    def dims(w: Int, h: Int, bbox: (Double, Double, Double, Double), trim: Int) = {
+      val img = ImageDecode.cropBBox(ImageDecode.Decoded(w, h, new Array[Byte](w * h * 3)), bbox, trim)
+      (img.width, img.height)
+    }
+    assert(dims(40, 30, (5, 5, 25, 25), 0) == ((20, 20)))
+    assert(dims(40, 30, (5, 5, 25, 25), 30) == ((40, 30)))
+    assert(dims(100, 100, (10.9, 10.9, 20.2, 20.2), 1) == ((12, 12))) // (9,9)..(21,21)
   }
 }

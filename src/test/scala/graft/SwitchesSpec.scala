@@ -6,8 +6,9 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** No A/B-only switches in the library: the environment it reads is the
-  * deployment settings and nothing else, and the benchmark mains take no
-  * path-selecting arguments.
+  * deployment settings and nothing else, the benchmark mains take no
+  * path-selecting arguments, every main gets its session from the one
+  * factory, and the tooling names only mains that exist.
   */
 class SwitchesSpec extends AnyFunSuite {
 
@@ -20,9 +21,11 @@ class SwitchesSpec extends AnyFunSuite {
     finally walk.close()
   }
 
+  private val keyed =
+    """(?:sys\.env(?:\.get|\.getOrElse|\.contains|\.apply)?|System\.getenv)\(\s*"([^"]+)"""".r
+
   test("src/main reads only the four deployment environment variables") {
     val access = """sys\.env|System\.getenv""".r
-    val keyed = """(?:sys\.env(?:\.get|\.getOrElse|\.contains|\.apply)?|System\.getenv)\(\s*"([^"]+)"""".r
     val srcs = mainSources.map(p => p -> Files.readString(p))
     assert(srcs.nonEmpty)
     // every access names its variable literally, so the key set below is complete
@@ -32,6 +35,34 @@ class SwitchesSpec extends AnyFunSuite {
     }
     val keys = srcs.flatMap { case (_, s) => keyed.findAllMatchIn(s).map(_.group(1)) }.toSet
     assert(keys == deploymentSettings)
+  }
+
+  test("only ExtractJob.session and the two driver instruments build a session or read the core count") {
+    val owners = Set("ExtractJob.scala", "Bench.scala", "Verify.scala")
+    val srcs = mainSources.map(p => p.getFileName.toString -> Files.readString(p))
+    val builders = srcs.collect { case (f, s) if s.contains("SparkSession.builder") => f }.toSet
+    val coreReaders = srcs.collect {
+      case (f, s) if keyed.findAllMatchIn(s).exists(_.group(1) == "SPARK_GRAFT_CPUS") => f
+    }.toSet
+    assert(builders == owners)
+    assert(coreReaders == owners)
+  }
+
+  test("every graft main named in the tooling scripts and the verify notes exists") {
+    val scripts = {
+      val ls = Files.list(Paths.get("tools"))
+      try ls.iterator().asScala.filter(_.toString.endsWith(".sh")).toList finally ls.close()
+    }
+    val docs = scripts :+ Paths.get(".claude/skills/verify/SKILL.md")
+    val named = """\bgraft\.(?:[a-z]\w*\.)*[A-Z]\w*""".r
+    val mains = docs.flatMap(p => named.findAllIn(Files.readString(p))).toSet
+    assert(mains.contains("graft.jobs.ScalingBench") && mains.contains("graft.Verify"))
+    mains.foreach { m =>
+      val main = scala.util.Try(
+        Class.forName(m, false, getClass.getClassLoader).getMethod("main", classOf[Array[String]]))
+      assert(main.isSuccess && java.lang.reflect.Modifier.isStatic(main.get.getModifiers),
+        s"$m has no static main(Array[String])")
+    }
   }
 
   test("ScalingBench rejects an extra argument with a usage message") {
