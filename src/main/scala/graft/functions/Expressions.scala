@@ -288,15 +288,19 @@ object ExprImpl {
     val n = words.numElements()
     val last = math.max(n - gramLen, 0)
     val space = Array[Byte](' ')
+    // each word's bytes once per document, not once per window it falls in
+    // (getBytes copies: split() yields non-zero offsets); null stays null
+    val bytes = Array.tabulate(n)(w => if (words.isNullAt(w)) null else words.getUTF8String(w).getBytes)
     var i = 0
     while (i <= last) {
       md.reset()
       var k = 0
       var wrote = false
       while (k < gramLen && i + k < n) {
-        if (!words.isNullAt(i + k)) {
+        val b = bytes(i + k)
+        if (b != null) {
           if (wrote) md.update(space)
-          md.update(words.getUTF8String(i + k).getBytes)
+          md.update(b)
           wrote = true
         }
         k += 1

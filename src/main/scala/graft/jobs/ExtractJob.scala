@@ -30,14 +30,11 @@ import org.apache.spark.sql.functions._
 object ExtractJob {
 
   /** Span-write salt modulus: spreads one bucket — and one folio — across
-    * this many tasks. Shared with [[WriteScaleBench]] so the published
-    * BENCH.md §17 adjudication cannot silently drift from the shipped plan.
+    * this many tasks.
     */
   val WriteSaltFactor = 16
 
-  /** Default bucket count (resume granularity); shared with
-    * [[WriteScaleBench]] for the same no-drift reason.
-    */
+  /** Default bucket count (resume granularity). */
   val DefaultBuckets = 64
 
   final case class Args(
@@ -94,8 +91,7 @@ object ExtractJob {
     * bucket is a native expression, no ScalaUDF node (asserted in JobSpec).
     *
     * Adjudicated against `repartitionByRange(bucket, doc_id, order)` — the
-    * north_rule's named mechanism — by measurement (WriteScaleBench,
-    * BENCH.md §17): on a MATERIALIZED input the range write is ~1.6×
+    * north_rule's named mechanism — by measurement (BENCH.md §17): on a MATERIALIZED input the range write is ~1.6×
     * faster and doc-clusters the files, but its RangePartitioner SAMPLES
     * its child, which here is the un-cached generate→extract pipeline —
     * the sampling pass re-executes the whole extraction (HeartbeatSpec's

@@ -3,7 +3,7 @@ package graft.jobs
 import graft.model.LineageRow
 import graft.sources.{Warc, WarcGen}
 import graft.storage.Lineage
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Resumable crawl ingestion: WARC files → HTTP unwrap → charset decode →
@@ -116,89 +116,90 @@ object WarcIngestJob {
     }
   }
 
+  /** The span and link rows of the crawl files at `paths`, one file per
+    * task: columns (bucket = file index, uri, offset, kind, text,
+    * media_ref). A repartition would shuffle the file BYTES (gigabytes per
+    * group at production segment sizes); instead, with maxPartitionBytes
+    * below the 4 MiB open cost the scan planner refuses to pack two files
+    * into one split, so each task owns one whole file with zero data
+    * movement. The conf must be live at ACTION time (physical scan
+    * planning), and it lives on a CLONED session (newSession shares the
+    * SparkContext but owns its SQLConf) — same reasoning as CompactJob:
+    * mutating the caller's session would silently re-split every
+    * concurrently planned scan to this 1 MiB target, and a save/restore is
+    * not exception-safe against other threads' conf sets.
+    */
+  def pageRows(spark: SparkSession, paths: Seq[String]): DataFrame = {
+    val iso = spark.newSession()
+    iso.conf.set("spark.sql.files.maxPartitionBytes", s"${1 << 20}")
+    import iso.implicits._
+    iso.read.format("binaryFile").load(paths: _*)
+      .withColumn("name", element_at(split(col("path"), "/"), -1))
+      .select(col("name"), col("content"))
+      .as[(String, Array[Byte])]
+      .flatMap { case (name, b) => fileRows(name, b) }
+      .toDF("bucket", "uri", "offset", "kind", "text", "media_ref")
+  }
+
+  /** One crawl file's rows. LENIENT parse (real-web html omits close tags)
+    * with a per-PAGE quarantine: a page whose decode/parse/extraction still
+    * fails emits one `kind = "error"` row (offset −1) instead of killing
+    * the file's task — at crawl scale a single broken capture must cost
+    * one row, not a job. Error rows live in the same bucket partition
+    * (downstream filters `offset >= 0`) and are counted per file in
+    * lineage `error_count`. ONE parse per page feeds BOTH outputs:
+    * main-content spans and the page's followable outlinks (resolved +
+    * canonicalized here, where the page URI is in hand). Link rows share
+    * the span table — `kind = "link"`, text = the canonical target,
+    * media_ref = its host — so the crawl is read and parsed exactly once;
+    * the frontier publish is a pure aggregation over committed rows.
+    */
+  private def fileRows(name: String, b: Array[Byte]): Iterator[SpanRow] = {
+    val fileIdx = name.stripPrefix("part-").stripSuffix(".warc.gz").toInt
+    tornFileGuard(Warc.records(b).filter(Warc.isHtml200).flatMap { r =>
+      try {
+        val dom = graft.text.HtmlDom.parse(Warc.decodeHtml(r), lenient = true)
+        val spanRows = graft.text.MainContent.extract(dom).spans
+          .map(s => (fileIdx, r.targetUri, s.offset, s.kind, s.text, s.media_ref))
+        val linkRows = graft.text.PageMeta.of(dom).links.iterator
+          .filterNot(_.noFollow)
+          .flatMap(l => graft.text.UrlResolve.normalizeHttp(
+            graft.text.UrlResolve.resolve(r.targetUri, l.href)))
+          .zipWithIndex
+          .map { case (u, i) =>
+            (fileIdx, r.targetUri, i, "link", u, graft.text.UrlResolve.hostOf(u))
+          }
+        // a page that parses cleanly but yields ZERO content spans must
+        // still be visible in lineage (doc_count) — without a marker it
+        // vanished from the job's accounting entirely (neither a doc
+        // nor an error). offset −1 keeps it out of every offset >= 0
+        // consumer, like the error quarantine rows.
+        val marker =
+          if (spanRows.isEmpty)
+            Seq((fileIdx, r.targetUri, -1, "empty", "", ""))
+          else Seq.empty
+        spanRows ++ linkRows ++ marker
+      } catch { case scala.util.control.NonFatal(e) =>
+        Seq((fileIdx, r.targetUri, -1,
+          "error", s"${e.getClass.getSimpleName}: " +
+            Option(e.getMessage).getOrElse("").take(200), ""))
+      }
+    }, fileIdx, name)
+  }
+
   /** One resumable run. Returns (processedFiles, extractedPages, quarantinedPages). */
   def run(spark: SparkSession, args: Args): (Int, Long, Long) = {
-    import spark.implicits._
     materializeCrawl(spark, args)
     val committed = Lineage.committedPartitions(spark, args.out)
     val todo = (0 until args.files).filterNot(f => committed.contains(f.toLong))
     var pagesDone = 0L
     var errorsDone = 0L
     var groupsDone = 0
-    // one crawl file per task WITHOUT a repartition: a repartition would
-    // shuffle the file BYTES (gigabytes per group at production segment
-    // sizes); instead, with maxPartitionBytes below the 4 MiB open cost
-    // the scan planner refuses to pack two files into one split, so each
-    // task owns one whole file with zero data movement. The conf must be
-    // live at ACTION time (physical scan planning), and it lives on a
-    // CLONED session (newSession shares the SparkContext but owns its
-    // SQLConf) — same reasoning as CompactJob: mutating the caller's
-    // session would silently re-split every concurrently planned scan to
-    // this job's 1 MiB target for the whole group loop, and a save/restore
-    // is not exception-safe against other threads' conf sets
-    val iso = spark.newSession()
-    iso.conf.set("spark.sql.files.maxPartitionBytes", s"${1 << 20}")
     todo.grouped(args.groupSize).foreach { group =>
       if (args.failAfterGroups >= 0 && groupsDone >= args.failAfterGroups)
         throw new RuntimeException(s"injected failure after $groupsDone groups")
-      // the scan reads EXACTLY this group's files — path-list pruning.
-      // One file per PARTITION comes from the packing confs, NOT a
-      // repartition: repartition would shuffle the file BYTES (gigabytes
-      // per group at production segment sizes); with maxPartitionBytes
-      // below the open cost the scan planner simply refuses to pack two
-      // files into one split, so each task owns one whole file with zero
-      // data movement.
-      val paths = group.map(f => filePath(args.out, f))
-      val bytes = iso.read.format("binaryFile").load(paths: _*)
-        .withColumn("name", element_at(split(col("path"), "/"), -1))
-        .select(col("name"), col("content"))
-        .as[(String, Array[Byte])]
-      // LENIENT parse (real-web html omits close tags) with a per-PAGE
-      // quarantine: a page whose decode/parse/extraction still fails emits
-      // one `kind = "error"` row (offset −1) instead of killing the file's
-      // task — at crawl scale a single broken capture must cost one row,
-      // not a job. Error rows live in the same bucket partition
-      // (downstream filters `offset >= 0`) and are counted per file in
-      // lineage `error_count`.
-      // ONE parse per page feeds BOTH outputs: main-content spans and the
-      // page's followable outlinks (resolved + canonicalized here, where
-      // the page URI is in hand). Link rows share the span table —
-      // `kind = "link"`, text = the canonical target, media_ref = its host
-      // — so the crawl is read and parsed exactly once; the frontier
-      // publish below is a pure aggregation over committed rows.
-      val spans = bytes.flatMap { case (name, b) =>
-        val fileIdx = name.stripPrefix("part-").stripSuffix(".warc.gz").toInt
-        tornFileGuard(Warc.records(b).filter(Warc.isHtml200).flatMap { r =>
-          try {
-            val dom = graft.text.HtmlDom.parse(Warc.decodeHtml(r), lenient = true)
-            val spanRows = graft.text.MainContent.extract(dom).spans
-              .map(s => (fileIdx, r.targetUri, s.offset, s.kind, s.text, s.media_ref))
-            val linkRows = graft.text.PageMeta.of(dom).links.iterator
-              .filterNot(_.noFollow)
-              .flatMap(l => graft.text.UrlResolve.normalizeHttp(
-                graft.text.UrlResolve.resolve(r.targetUri, l.href)))
-              .zipWithIndex
-              .map { case (u, i) =>
-                (fileIdx, r.targetUri, i, "link", u, graft.text.UrlResolve.hostOf(u))
-              }
-            // a page that parses cleanly but yields ZERO content spans must
-            // still be visible in lineage (doc_count) — without a marker it
-            // vanished from the job's accounting entirely (neither a doc
-            // nor an error). offset −1 keeps it out of every offset >= 0
-            // consumer, like the error quarantine rows.
-            val marker =
-              if (spanRows.isEmpty)
-                Seq((fileIdx, r.targetUri, -1, "empty", "", ""))
-              else Seq.empty
-            spanRows ++ linkRows ++ marker
-          } catch { case scala.util.control.NonFatal(e) =>
-            Seq((fileIdx, r.targetUri, -1,
-              "error", s"${e.getClass.getSimpleName}: " +
-                Option(e.getMessage).getOrElse("").take(200), ""))
-          }
-        }, fileIdx, name)
-      }.toDF("bucket", "uri", "offset", "kind", "text", "media_ref")
-
+      // the scan reads EXACTLY this group's files — path-list pruning
+      val spans = pageRows(spark, group.map(f => filePath(args.out, f)))
       val obs = org.apache.spark.sql.Observation(s"warc_stats_$groupsDone")
       val statCols: Seq[org.apache.spark.sql.Column] = group.toSeq.flatMap { f =>
         // coalesce: SUM over a ZERO-row frame is NULL (the otherwise(0L)

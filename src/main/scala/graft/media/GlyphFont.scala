@@ -94,7 +94,18 @@ object GlyphFont {
     */
   def drawText(d: ImageDecode.Decoded, text: String, x0: Int, y0: Int,
                scale: Int, color: (Int, Int, Int)): ImageDecode.Decoded = {
-    val out = d.rgb.clone()
+    val out = ImageDecode.Decoded(d.width, d.height, d.rgb.clone())
+    drawInto(out, text, x0, y0, scale, color)
+    out
+  }
+
+  /** [[drawText]] painting into `d`'s own pixels — for a caller that draws
+    * many labels into one reused buffer and would otherwise pay a full
+    * image copy per label.
+    */
+  def drawInto(d: ImageDecode.Decoded, text: String, x0: Int, y0: Int,
+               scale: Int, color: (Int, Int, Int)): Unit = {
+    val out = d.rgb
     var ci = 0
     while (ci < text.length) {
       rows.get(text.charAt(ci)).foreach { glyph =>
@@ -131,7 +142,6 @@ object GlyphFont {
       }
       ci += 1
     }
-    ImageDecode.Decoded(d.width, d.height, out)
   }
 
   /** The complete label step the reference runs after the average-color

@@ -670,6 +670,27 @@ object PdfRaster {
                    dashDev: IndexedSeq[Double], phaseDev: Double): Unit = {
       require(lwDev > 0, s"page $pageNum: non-positive stroke width $lwDev")
       val hw = lwDev / 2.0
+      // the dash walker takes one step (and one scanFill per ON span) per
+      // pattern element along the path: bound that count by the page's
+      // pixel count before walking, so a tiny dash on a long path rejects
+      // instead of stalling the task (cost is linear in path length)
+      if (dashDev.nonEmpty) {
+        val cycle = if (dashDev.length % 2 == 0) dashDev.sum else dashDev.sum * 2.0
+        val perCycle = if (dashDev.length % 2 == 0) dashDev.length else dashDev.length * 2
+        val pathLen = subs.iterator.map { sub =>
+          val ring = deviceRing(sub)
+          val segs = if (sub.closed) ring.length else ring.length - 1
+          (0 until math.max(segs, 0)).iterator.map { i =>
+            val (x0, y0) = ring(i)
+            val (x1, y1) = ring((i + 1) % ring.length)
+            math.hypot(x1 - x0, y1 - y0)
+          }.sum
+        }.sum
+        val steps = pathLen / cycle * perCycle
+        require(steps <= w.toDouble * h,
+          s"page $pageNum: dash pattern [${dashDev.mkString(" ")}] needs ~${steps.toLong} " +
+            s"steps along a ${pathLen.toLong}-unit path, over the page's ${w.toLong * h}-pixel budget")
+      }
       subs.foreach { sub =>
         val ring = deviceRing(sub)
         val n = ring.length

@@ -76,8 +76,9 @@ object AnnKMeans {
 
   /** The clustered candidate vectors: vec_id ∈ [0, n), cluster =
     * vec_id div perCluster, v[i] = center + member perturbation. Defaults
-    * are the frozen oracle fixture; AnnScaleBench passes 100× sizes — the
-    * CONSTRUCTION is shared so the scale bench certifies the same code.
+    * are the frozen oracle fixture; the ann tier ([[graft.jobs.Tier]])
+    * passes 100× sizes — the CONSTRUCTION is shared so the tier certifies
+    * the same code.
     */
   def candidates(spark: SparkSession, n: Int = nCandidates,
                  perCluster: Int = PerCluster): DataFrame =
@@ -120,8 +121,8 @@ object AnnKMeans {
   }
 
   /** The quantizer training itself, parameterized (no memoization) — shared
-    * with AnnScaleBench so the 100×-tier bench certifies THIS code, not a
-    * copy: bounded md5-ranked sample via TakeOrderedAndProject, vec_id
+    * with the ann tier ([[graft.jobs.Tier]]) so the 100× tier certifies
+    * THIS code, not a copy: bounded md5-ranked sample via TakeOrderedAndProject, vec_id
     * summation order, evenly-spaced init, [[LloydIters]] Lloyd iterations
     * with lowest-centroid tiebreak, empty cluster keeps its centroid.
     */
@@ -200,10 +201,10 @@ object AnnKMeans {
   /** Top-[[Probes]] centroid lists per query (TopM keeps the whole search
     * plan free of per-query window sorts).
     */
-  private def probes(spark: SparkSession, qs: DataFrame, cents: DataFrame,
+  private[graft] def probes(spark: SparkSession, qs: DataFrame, cents: DataFrame,
                      nProbes: Int = Probes): DataFrame = {
     // VECTOR-FREE (q_id, cent_id) pairs — broadcast-sized at any query
-    // volume. AnnScaleBench (BENCH.md §7) measured why qv must not ride
+    // volume. The 100× ann tier (BENCH.md §7) measured why qv must not ride
     // along: at 1,000 queries a vector-carrying probe table exceeded the
     // broadcast threshold and the probe join fell back to exchanging 41M
     // vector-carrying corpus rows over 256 skewed keys.
@@ -304,9 +305,9 @@ object AnnKMeans {
       .select(col("q_id"), col("vec_id"), round(col("c"), 4).as("cos4"), col("rn"))
       .orderBy("q_id", "rn")
 
-  /** Exact brute-force top-3 (the ground truth for recall). */
-  private def bfTop3(spark: SparkSession, cands: DataFrame): DataFrame = {
-    val all = cands.crossJoin(broadcast(queries(spark)))
+  /** Exact brute-force top-3 of `qs` over `cands` (the ground truth for recall). */
+  private[graft] def bfTop3(cands: DataFrame, qs: DataFrame): DataFrame = {
+    val all = cands.crossJoin(broadcast(qs))
       .withColumn("c", cosExpr("qv", "v"))
       .select(col("q_id"), col("vec_id"), col("c"))
     TopM.topM(all, "q_id", Seq(("c", false), ("vec_id", true)), TopK, "rn")
@@ -347,7 +348,7 @@ object AnnKMeans {
     // tracked persist: the candidate fixture feeds brute force, the LSH
     // path and the IVF path (released by the caller via releaseCaches)
     val cands = CacheTracker.track(candidates(spark))
-    val bf = bfTop3(spark, cands)
+    val bf = bfTop3(cands, queries(spark))
     val cents = centroidsDF(spark)
     // assignment and probe lists each feed BOTH the ivf3 search and the
     // scanned-fraction audit below — tracked persists stop the 1600×16

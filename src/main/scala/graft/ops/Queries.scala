@@ -379,7 +379,8 @@ object Queries {
     dedupComponentsFrom(spark, minhashStarEdges(minhashSigCore(spark, dir)))
 
   /** The propagation loop from any (a, b) pair frame; `onRound` observes
-    * (round, changedLabels, wallMillis) — the DedupScaleBench instrument.
+    * (round, changedLabels, wallMillis) — the dedup tier's
+    * ([[graft.jobs.Tier]]) instrument.
     */
   private[graft] def dedupComponentsFrom(
       spark: SparkSession, pairsIn: DataFrame,
@@ -511,7 +512,7 @@ object Queries {
   private def shingled(spark: SparkSession, dir: String): DataFrame =
     shingledFrom(docsWithDups(spark, dir))
 
-  /** Same, from any (doc_id, text) frame — the DedupScaleBench entry. */
+  /** Same, from any (doc_id, text) frame — the dedup tier's entry. */
   private[graft] def shingledFrom(docs: DataFrame): DataFrame =
     docs
       .withColumn("words", split(col("text"), " "))
@@ -1200,7 +1201,7 @@ object Queries {
     tfidfRankFrom(spark, t(spark, dir, "documents").select(col("doc_id"), col("text")))
 
   /** The scoring core over any (doc_id, text) frame — shared by the catalog
-    * query and [[graft.jobs.TfidfScaleBench]], which A/Bs this
+    * query and the tfidf tier ([[graft.jobs.Tier]]), which A/Bs this
     * filter-before-aggregate shape against the naive full-corpus tf
     * aggregation at the 500k-doc tier.
     */
@@ -1219,7 +1220,7 @@ object Queries {
 
   /** Score + rank a prebuilt (term, doc_id, tf) postings frame — the ONE
     * scoring core shared by [[tfidfRankFrom]] and
-    * [[graft.jobs.TfidfScaleBench]]'s naive leg, so the bench's
+    * the tfidf tier's naive leg ([[graft.jobs.Tier]]), so the tier's
     * "identical arithmetic" equality gate is true by construction rather
     * than by hand-copy.
     */
@@ -1750,8 +1751,8 @@ object Queries {
 
   /** `onRound` observes (step, detail, wallMillis): step 0 is the one
     * corpus-scale pass (detail = distinct-word vocabulary size), steps 1..K
-    * the merge rounds (detail = the winning pair's count) — the
-    * BpeScaleBench instrument.
+    * the merge rounds (detail = the winning pair's count) — the bpe
+    * tier's ([[graft.jobs.Tier]]) instrument.
     */
   private[graft] def bpeMergesFrom(spark: SparkSession, docs: DataFrame,
       onRound: (Int, Long, Long) => Unit = (_, _, _) => ()): DataFrame = {
@@ -3280,7 +3281,7 @@ object Queries {
 
   /** The scoring core: train the backoff model on `trainIn`, score every
     * document of `docsIn` (both (doc_id, text); no presentation sort) —
-    * shared by [[lmQuality]] and scale benches. Separate train/score
+    * shared by [[lmQuality]] and the lm tier ([[graft.jobs.Tier]]). Separate train/score
     * inputs are the production shape: the reference model corpus is a
     * fixed curated artifact, the scored corpus is the crawl.
     */
@@ -3300,17 +3301,8 @@ object Queries {
     require(!totRow.isNullAt(0) && totRow.getLong(0) > 0L,
       "LM training slice is empty — the backoff model has no denominator")
     val total = totRow.getLong(0)
-    def bigrams(df: DataFrame, keep: Column*): DataFrame = df
-      .filter(size(col("words")) >= 2)
-      .select(keep :+ explode(expr(
-        """transform(sequence(0, size(words) - 2),
-          |  i -> named_struct('w1', element_at(words, i + 1), 'w2', element_at(words, i + 2)))"""
-          .stripMargin)).as("g"): _*)
-      .select(keep :+ col("g.w1").as("w1") :+ col("g.w2").as("w2"): _*)
-    val bi = bigrams(train)
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cnt_bi"))
-      .filter(col("cnt_bi") >= LmPruneMinCount)
-    bigrams(docs, col("doc_id"))
+    val bi = lmBigramModel(trainIn)
+    lmBigrams(docs, col("doc_id"))
       .join(broadcast(bi), Seq("w1", "w2"), "left_outer")
       .join(broadcast(uni.select(col("w").as("w1"), col("cnt_uni").as("cnt_prefix"))),
         Seq("w1"), "left_outer")
@@ -3329,6 +3321,23 @@ object Queries {
         expr("score_sum DIV n_scored").as("mean_p_micro"),
         (expr("score_sum DIV n_scored") >= LmKeepMinMicroMean).cast("int").as("keep"))
   }
+
+  /** The model's pruned bigram table (w1, w2, cnt_bi) from the (doc_id,
+    * text) training slice — the bounded artifact [[lmQualityFrom]]
+    * broadcasts.
+    */
+  private[graft] def lmBigramModel(trainIn: DataFrame): DataFrame =
+    lmBigrams(trainIn.select(split(col("text"), " ").as("words")))
+      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cnt_bi"))
+      .filter(col("cnt_bi") >= LmPruneMinCount)
+
+  private def lmBigrams(df: DataFrame, keep: Column*): DataFrame = df
+    .filter(size(col("words")) >= 2)
+    .select(keep :+ explode(expr(
+      """transform(sequence(0, size(words) - 2),
+        |  i -> named_struct('w1', element_at(words, i + 1), 'w2', element_at(words, i + 2)))"""
+        .stripMargin)).as("g"): _*)
+    .select(keep :+ col("g.w1").as("w1") :+ col("g.w2").as("w2"): _*)
 
   /** Exact-substring dedup gram length, in words (Lee et al. 2021,
     * "Deduplicating Training Data Makes Language Models Better", use 50
@@ -3368,7 +3377,7 @@ object Queries {
 
   /** The substring-dedup core from any (doc_id, text) frame (no planted
     * mirrors, no presentation sort) — shared by [[substringDedup]] and the
-    * scale-tier bench ([[graft.jobs.SubstrScaleBench]]).
+    * substr tier ([[graft.jobs.Tier]]).
     *
     * Shape adjudicated by a same-JVM alternating A/B at 500k docs / 15.5M
     * grams / 93% duplication (the family-chain adversarial corpus): the
@@ -3384,8 +3393,7 @@ object Queries {
     * O(len·coverage) array_contains per doc, and the full words arrays
     * still shuffle to meet the per-doc start lists — it trades three
     * digest/int-row exchanges for one token-text exchange plus interpreted
-    * per-token CPU, and loses. The loser ships only as the bench's
-    * comparison variant ([[graft.jobs.SubstrScaleBench]]).
+    * per-token CPU, and loses, so it is not shipped.
     */
   private[graft] def substringDedupFrom(docsIn: DataFrame): DataFrame = {
     val docs = docsIn.select(col("doc_id"), split(col("text"), " ").as("words"))
@@ -3645,7 +3653,7 @@ object Queries {
   }
 
   /** The power-iteration loop from any (src, dst) edge frame — shared by the
-    * catalog query and [[graft.jobs.RankScaleBench]]. Out-degree is
+    * catalog query and the rank tier ([[graft.jobs.Tier]]). Out-degree is
     * loop-invariant, so it is joined into the edge table ONCE and the result
     * cached partitioned by `src`: across all [[RankIters]] rounds the (big)
     * edge table never reshuffles — each round moves only the (node-sized)

@@ -189,6 +189,12 @@ class PdfRasterSpec extends AnyFunSuite {
     // checks but makes no float progress in the phase walker
     // (5.0 - 1e-300 == 5.0) — must reject loudly, not hang an executor
     rejects("[0.0000000001 10] 5 d 10 10 m 20 20 l S", "sub-epsilon dash element")
+    // an element just above that epsilon still walks 5e7 steps along a
+    // 50-unit line (linear in path length): the step count is bounded by
+    // the page's pixels before walking, so it rejects at once
+    val dashT0 = System.nanoTime()
+    rejects("[0.000001] 0 d 0 0 0 RG 1 w 0 20 m 50 20 l S", "pixel budget")
+    assert(System.nanoTime() - dashT0 < 1000000000L, "dash budget reject took over 1 s")
     // a ZERO element stays legal (PDF allows zero spans when not all zero)
     val zeroSpan = PdfRaster.rasterize(tinyPdf("[0 6] 0 d 0 0 0 RG 2 w 10 20 m 40 20 l S"), 72)
     assert(zeroSpan.nonEmpty)

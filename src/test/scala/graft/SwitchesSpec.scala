@@ -71,4 +71,11 @@ class SwitchesSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("usage"))
   }
+
+  test("Tier rejects a fourth argument with a usage message") {
+    val e = intercept[IllegalArgumentException] {
+      graft.jobs.Tier.main(Array("dedup", "100", "1", "debug"))
+    }
+    assert(e.getMessage.contains("usage"))
+  }
 }

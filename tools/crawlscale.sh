@@ -1,9 +1,10 @@
 #!/bin/bash
 # Crawl-chain N vs 4N scaling leg runner (BENCH.md §9) — the scalingbench.sh
-# protocol applied to graft.jobs.CrawlScaleBench: host-weather probe in a
-# SEPARATE JVM first (in-JVM probing costs the leg ~20%, BENCH.md §2b), then
-# the pinned, ParallelGC, fixed-heap leg.
-# usage: tools/crawlscale.sh <cpuset e.g. 0-1> <cores> <files> <pagesPerFile> <repeats>
+# protocol applied to the crawl tier (graft.jobs.Tier crawl): host-weather
+# probe in a SEPARATE JVM first (in-JVM probing costs the leg ~20%, BENCH.md
+# §2b), then the pinned, ParallelGC, fixed-heap leg. The tier reads 200 pages
+# per WARC file, so <pages> = 200 × files.
+# usage: tools/crawlscale.sh <cpuset e.g. 0-1> <cores> <pages>
 set -euo pipefail
 cd "$(dirname "$0")/.."
 CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')x"
@@ -22,4 +23,4 @@ exec taskset -c "$1" java \
   --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Xmx${HEAP}g -Xms${HEAP}g \
   ${SCALE_GC:--XX:+UseParallelGC} \
-  -cp "$CP" graft.jobs.CrawlScaleBench "$2" "$3" "$4" "$5"
+  -cp "$CP" graft.jobs.Tier crawl "$3" "$2"
