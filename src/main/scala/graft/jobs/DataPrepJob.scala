@@ -1,9 +1,7 @@
 package graft.jobs
 
-import graft.model.LineageRow
 import graft.ops.Queries
-import graft.storage.Lineage
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The resumable, lineage-tracked COMPOSED data-prep pipeline — the job twin
@@ -17,15 +15,16 @@ import org.apache.spark.sql.functions._
   * snapshot), not the chunk table, which carries only chunk digests.
   *
   * Resume model (north_rule, stage-granular): dedup and CC are GLOBAL
-  * operations, so the checkpoint unit is the STAGE, not a key range — each
-  * stage writes its full output snapshot to `<out>/stage_<i>` and then
-  * commits one lineage row (partition_id = stage index, doc_count = input
-  * rows, span_count = output rows, partition_hash = xxhash64-xor of the
-  * output's doc ids). A rerun reads the lineage table and skips committed
-  * stages, resuming from the first uncommitted one against the previous
-  * stage's on-disk snapshot; a crash between a stage's write and its
-  * lineage commit simply overwrites the orphan snapshot (stage outputs are
-  * deterministic and the write is mode=Overwrite — idempotent).
+  * operations, so the checkpoint unit is the STAGE, not a key range. The
+  * stages run through [[ExtractJob.resumable]] in groups of one: each
+  * stage writes its full output snapshot to `<out>/stage_<i>` and commits
+  * one lineage row (partition_id = stage index, doc_count = input rows,
+  * span_count = output rows, partition_hash = xxhash64-xor of the output's
+  * doc ids — both observed during the write, never re-scanned). A rerun
+  * skips committed stages, resuming from the first uncommitted one against
+  * the previous stage's on-disk snapshot; a crash between a stage's write
+  * and its lineage commit simply overwrites the orphan snapshot (stage
+  * outputs are deterministic — idempotent).
   *
   * At 10^12-doc scale each snapshot is a partitioned Iceberg table and the
   * stage boundary doubles as the shuffle barrier the global stages need
@@ -68,51 +67,30 @@ object DataPrepJob {
 
   /** One resumable run; returns the number of stages executed (0 = no-op). */
   def run(spark: SparkSession, args: Args): Int = {
-    // stage input counts come from lineage: stage i's input row count IS the
-    // committed span_count of its input stage — a fresh in.count() here
-    // would pay a full extra pass over every stage input just for the
-    // lineage doc_count (only stage 0, whose input is the raw corpus with
-    // no lineage row yet, pays a count)
-    val outCounts = scala.collection.mutable.Map.empty[Long, Long] ++
-      Lineage.read(spark, args.out).collect()
-        .map(r => r.partition_id -> r.span_count)
-    val committed = outCounts.keySet.toSet
-    new java.io.File(args.out).mkdirs()
-    var executed = 0
-    StageNames.indices.foreach { idx =>
-      if (!committed.contains(idx)) {
-        if (args.failAfterStages >= 0 && executed >= args.failAfterStages)
-          throw new RuntimeException(s"injected failure after $executed stages")
-        val in: DataFrame =
-          if (idx == 0)
-            Queries.docsWithDups(spark, args.sfDir).select(col("doc_id"), col("text"))
-          else
-            spark.read.parquet(stageDir(args.out, inputStage(idx)))
-        val inCount =
-          if (idx == 0) in.count() else outCounts(inputStage(idx))
-        stage(spark, args.sfDir, idx, in)
-          .write.mode(SaveMode.Overwrite).parquet(stageDir(args.out, idx))
-        Queries.releaseCaches() // the CC stage tracks per-round caches
-        // stats from the COMMITTED snapshot (what a resume would read), not
-        // the in-memory frame: count + order-insensitive id hash
-        val outSnap = spark.read.parquet(stageDir(args.out, idx))
-        val st = outSnap.agg(
-          count(lit(1)).as("n"),
-          expr("bit_xor(xxhash64(CAST(doc_id AS STRING)))").as("h")).collect()(0)
-        Lineage.append(spark, args.out, Seq(LineageRow(
-          snapshot_id = 0L,
-          partition_id = idx,
-          partition_hash =
-            if (st.isNullAt(1)) "0" else java.lang.Long.toHexString(st.getLong(1)),
-          doc_count = inCount,
-          span_count = st.getLong(0),
-          divergence = 0.0,
-          committed_at = args.clock())))
-        outCounts(idx) = st.getLong(0)
-        executed += 1
-      }
-    }
-    executed
+    // stats of the written snapshot: its row count and order-insensitive id hash
+    val stats = ExtractJob.UnitStats(spans = lit(true), docs = lit(false), errors = lit(false),
+      hashed = lit(true), key = col("doc_id").cast("string"))
+    ExtractJob.resumable(spark, args.out, StageNames.indices, groupSize = 1, snapshotId = 0L,
+        args.failAfterStages, failAfterWrite = -1, args.clock) { (group, committed, _) =>
+      val idx = group.head
+      val in: DataFrame =
+        if (idx == 0)
+          Queries.docsWithDups(spark, args.sfDir).select(col("doc_id"), col("text"))
+        else
+          spark.read.parquet(stageDir(args.out, inputStage(idx)))
+      // stage i's input row count IS the committed span_count of its input
+      // stage — a fresh in.count() would pay a full extra pass over every
+      // stage input just for the lineage doc_count (only stage 0, whose
+      // input is the raw corpus with no lineage row, pays a count)
+      val inCount =
+        if (idx == 0) in.count() else committed(inputStage(idx).toLong).span_count
+      ExtractJob.GroupWrite(stage(spark, args.sfDir, idx, in), stageDir(args.out, idx),
+        unitCol = None, stats,
+        finish = rows => {
+          Queries.releaseCaches() // the CC stage tracks per-round caches
+          rows.map(_.copy(doc_count = inCount))
+        })
+    }.size
   }
 
   def main(argv: Array[String]): Unit = {

@@ -1,10 +1,11 @@
 package graft.jobs
 
 import graft.layout.ExtractConfig
+import graft.metrics.Heartbeat
 import graft.model.{Doc, DocOut, LineageRow}
 import graft.pipeline.{DocsGen, Extract}
 import graft.storage.Lineage
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The spark-submit entry point: resumable, lineage-tracked span extraction.
@@ -12,9 +13,10 @@ import org.apache.spark.sql.functions._
   * Shape (north_rule): read the interleaved `docs` table → hash-bucket by
   * `doc_id` → per bucket-group: narrow `mapPartitions` extraction → salted,
   * range-balanced write → lineage rows (bucket hash, doc/span counts,
-  * divergence) committed atomically. A rerun reads the lineage table and
-  * anti-joins committed buckets, so a kill between group commits loses at
-  * most one group of work and never recomputes committed buckets.
+  * divergence) committed atomically, through the [[resumable]] loop the
+  * crawl and data-prep jobs share. A rerun skips committed buckets, so a
+  * kill between group commits loses at most one group of work and never
+  * recomputes committed buckets.
   *
   * Skew: 0.1% of documents carry 5–10k spans (multi-page folios). Extraction
   * itself is row-local so skew only manifests at the shuffle for the
@@ -111,123 +113,155 @@ object ExtractJob {
       .repartition(col("bucket"), col("salt"))
       .drop("salt")
 
+  /** Lineage stats of a group write, as predicates over its rows:
+    * span/doc/error counts of the rows where `spans`/`docs`/`errors` hold,
+    * and the order-insensitive `bit_xor(xxhash64(key))` over the rows
+    * where `hashed` holds.
+    */
+  final case class UnitStats(spans: Column, docs: Column, errors: Column, hashed: Column, key: Column)
+
+  /** One group's write: with a `unitCol`, each unit is a partition of it;
+    * without, the group is one unit written as an unpartitioned snapshot.
+    * `finish` adjusts the lineage rows between the write and the commit.
+    */
+  final case class GroupWrite(rows: DataFrame, path: String, unitCol: Option[String],
+      stats: UnitStats, finish: Seq[LineageRow] => Seq[LineageRow] = identity)
+
+  /** The resume/commit loop of every lineage-tracked job ([[run]],
+    * [[WarcIngestJob.run]], [[DataPrepJob.run]]): read the lineage table
+    * once, skip committed units, and per group of `groupSize` units build
+    * the write with `plan` (given the rows committed so far, this run's
+    * included, and the run's [[Heartbeat]]), write it with its stats
+    * observed in the write's own result stage (no second pass, and no
+    * double count from a retried task), then stamp one `clock()` reading
+    * and commit the group's rows with [[Lineage.append]].
+    *
+    * DYNAMIC partition overwrite replaces exactly the group's unit
+    * directories, so a crash between write and commit cannot duplicate
+    * rows on resume: the retried group overwrites its own orphans. It is a
+    * per-write option because a session-wide `conf.set` would change every
+    * later partitioned write on the session. Test hooks: crash before the
+    * write of group `failAfterGroups` (0-based, this run) or between the
+    * write and the commit of group `failAfterWrite`; negative disables.
+    * Returns the rows this run committed.
+    */
+  def resumable(spark: SparkSession, out: String, units: Seq[Int], groupSize: Int,
+      snapshotId: Long, failAfterGroups: Int, failAfterWrite: Int, clock: () => Long)(
+      plan: (Seq[Int], collection.Map[Long, LineageRow], Heartbeat) => GroupWrite): Seq[LineageRow] = {
+    val committed = collection.mutable.Map.empty[Long, LineageRow] ++
+      Lineage.read(spark, out).collect().map(r => r.partition_id -> r)
+    val fresh = Seq.newBuilder[LineageRow]
+    // per-run progress surface (tail -f <out>/progress.jsonl mid-run)
+    val heartbeat = new Heartbeat(spark, out).start()
+    try units.filterNot(u => committed.contains(u.toLong)).grouped(groupSize).zipWithIndex.foreach {
+      case (group, g) =>
+        if (failAfterGroups >= 0 && g >= failAfterGroups)
+          throw new RuntimeException(s"injected failure after $g groups")
+        val w = plan(group, committed, heartbeat)
+        val obs = Observation()
+        val stats = unitStatCols(group, w.unitCol, w.stats)
+        w.rows.observe(obs, stats.head, stats.tail: _*)
+          .write.mode(SaveMode.Overwrite)
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy(w.unitCol.toSeq: _*).parquet(w.path)
+        val observed = obs.get
+        if (failAfterWrite >= 0 && g >= failAfterWrite)
+          throw new RuntimeException(s"injected failure after write of group $g")
+        val now = clock()
+        val rows = w.finish(group.map { u =>
+          def n(stat: String) = observed(s"${stat}_$u").asInstanceOf[Long]
+          LineageRow(snapshotId, u, java.lang.Long.toHexString(n("hash")), n("docs"), n("spans"),
+            divergence = 0.0, committed_at = now, error_count = n("errors"))
+        })
+        Lineage.append(spark, out, rows)
+        committed ++= rows.map(r => r.partition_id -> r)
+        fresh ++= rows
+        heartbeat.groupsDone.add(1L)
+    } finally heartbeat.stop()
+    fresh.result()
+  }
+
+  /** Four observed aggregates per unit; the coalesces matter because SUM
+    * and BIT_XOR over a unit with zero rows are NULL.
+    */
+  private def unitStatCols(units: Seq[Int], unitCol: Option[String], s: UnitStats): Seq[Column] =
+    units.flatMap { u =>
+      val mine = unitCol.fold(lit(true))(col(_) === u)
+      def rows(p: Column) = coalesce(sum(when(mine && p, 1L).otherwise(0L)), lit(0L))
+      Seq(rows(s.spans).as(s"spans_$u"), rows(s.docs).as(s"docs_$u"), rows(s.errors).as(s"errors_$u"),
+        coalesce(bit_xor(when(mine && s.hashed, xxhash64(s.key))), lit(0L)).as(s"hash_$u"))
+    }
+
   /** One resumable run. Returns (processedBuckets, processedDocs). */
   def run(spark: SparkSession, args: Args): (Int, Long) = {
-    import spark.implicits._
-    val committed = Lineage.committedPartitions(spark, args.out)
-    val todo = (0 until args.buckets).filterNot(b => committed.contains(b.toLong))
-    var processedDocs = 0L
-    var groupsDone = 0
-    // per-run progress surface (tail -f <out>/progress.jsonl mid-run)
-    new java.io.File(args.out).mkdirs()
-    val heartbeat = new graft.metrics.Heartbeat(spark, args.out).start()
-
-    // Each group generates ONLY its own documents: the doc id (and so its
-    // bucket) is derivable from the index before the expensive span
-    // synthesis runs — the faithful model of a bucket-partition-pruned input
-    // scan. (Round 1 persisted the whole Dataset[Doc], which paid full
-    // encoder serialization up front and a full-cache deserialize per group.)
     val buckets = args.buckets
-    try todo.grouped(args.groupSize).foreach { group =>
-      if (args.failAfterGroups >= 0 && groupsDone >= args.failAfterGroups)
-        throw new RuntimeException(s"injected failure after $groupsDone groups")
+    // Per bucket: every row is a span, each doc contributes exactly its
+    // order-0 span, and the doc hash xors each doc once via that span.
+    val firstSpan = col("order") === 0
+    val stats = UnitStats(spans = lit(true), docs = firstSpan, errors = lit(false),
+      hashed = firstSpan, key = col("doc_id"))
+    val rows = resumable(spark, args.out, 0 until buckets, args.groupSize, args.seed,
+        args.failAfterGroups, args.failAfterWrite, args.clock) { (group, _, heartbeat) =>
+      // Each group generates ONLY its own documents: the doc id (and so its
+      // bucket) is derivable from the index before the expensive span
+      // synthesis runs — the faithful model of a bucket-partition-pruned
+      // input scan.
       val groupSet = group.toSet
       val docs: Dataset[Doc] = DocsGen.docsWhere(spark, args.nDocs, args.seed, partitions = 64) {
         docId => groupSet.contains(bucketOf(docId, buckets))
       }
       val extracted: Dataset[DocOut] = Extract.run(docs, ExtractConfig.Default, Some(heartbeat))
+      GroupWrite(spanRows(extracted, buckets), s"${args.out}/data", Some("bucket"), stats,
+        finish = rows => args.expected.fold(rows) { expectedDir =>
+          val div = divergenceByBucket(spark, args.out, expectedDir, group, buckets)
+          rows.map(r => r.copy(divergence = div.getOrElse(r.partition_id.toInt, 0.0)))
+        })
+    }
+    (rows.size, rows.map(_.doc_count).sum)
+  }
 
-      // Lineage stats ride INSIDE the write job via Dataset.observe — no
-      // second extraction pass and no read-back job. Per bucket: span count,
-      // doc count (each doc contributes exactly its order-0 span) and the
-      // order-insensitive doc hash (bit_xor over order-0 spans only, so each
-      // doc is xored once; bit_xor ignores the CASE's nulls).
-      val obs = org.apache.spark.sql.Observation(s"graft_stats_$groupsDone")
-      val statCols: Seq[org.apache.spark.sql.Column] = group.toSeq.flatMap { b =>
-        Seq(
-          sum(when(col("bucket") === b, 1L).otherwise(0L)).as(s"spans_$b"),
-          sum(when(col("bucket") === b && col("order") === 0, 1L).otherwise(0L)).as(s"docs_$b"),
-          expr(s"bit_xor(CASE WHEN bucket = $b AND `order` = 0 THEN xxhash64(doc_id) END)").as(s"hash_$b"))
-      }
-      val out = spanRows(extracted, args.buckets)
-        .observe(obs, statCols.head, statCols.tail: _*)
-      // Idempotent group write: DYNAMIC partition overwrite replaces exactly
-      // this group's bucket directories, so a crash BETWEEN the write and the
-      // lineage commit cannot duplicate rows on resume (Append mode would) —
-      // the retried group simply overwrites its own orphan files. Set as a
-      // per-write option (a session-wide conf.set would silently change
-      // overwrite semantics for every later partitioned write that shares
-      // the session).
-      out.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket").parquet(s"${args.out}/data")
-      val observed: Map[String, Any] = obs.get
-
-      if (args.failAfterWrite >= 0 && groupsDone >= args.failAfterWrite)
-        throw new RuntimeException(s"injected failure after write of group $groupsDone")
-
-      // CER-style divergence vs an expected table (north_rule lineage metric):
-      // full-outer span join per bucket; divergence = 1 - avg(nls), with
-      // missing/extra spans scored 0 similarity. 0.0 when byte-identical.
-      val divergenceByBucket: Map[Int, Double] = args.expected match {
-        case None => Map.empty
-        case Some(expectedDir) =>
-          // the just-written group partitions ARE the fresh extraction —
-          // a pruned read-back instead of a re-extraction pass
-          val fresh = spark.read.parquet(s"${args.out}/data")
-            .filter(col("bucket").isInCollection(group))
-            .select(col("doc_id"), col("order"), col("text").as("new_text"),
-              col("bucket").as("fresh_bucket"))
-          // the expected table is written partitionBy(bucket) with the same
-          // bucketing, so filtering on the partition column prunes the scan
-          // to this group's directories (round 1 re-scanned the whole table
-          // per group through an unprunable UDF predicate); if the dir has
-          // no bucket column, fall back to the native expression (codegen'd,
-          // still no ScalaUDF, just not prunable)
-          val expRaw = spark.read.parquet(expectedDir)
-          // normalize the partition column's type: an externally written
-          // expected table may carry bucket as BIGINT (e.g. a DuckDB COPY),
-          // and a long surviving through the coalesce below would poison
-          // the getInt on the collected row
-          val expBucketed =
-            if (expRaw.columns.contains("bucket"))
-              expRaw.withColumn("bucket", col("bucket").cast("int"))
-            else expRaw.withColumn("bucket", bucketCol(args.buckets))
-          val exp = expBucketed
-            .filter(col("bucket").isInCollection(group))
-            .select(col("doc_id"), col("order"), col("text").as("exp_text"),
-              col("bucket").as("exp_bucket"))
-          fresh.join(exp, Seq("doc_id", "order"), "full_outer")
-            .withColumn("sim",
-              when(col("new_text").isNull || col("exp_text").isNull, lit(0.0))
-                .otherwise(graft.functions.ChurroFunctions.nls(col("new_text"), col("exp_text"))))
-            // both sides carry their partition column — reuse it instead of
-            // re-hashing doc_id per span row (coalesce covers the outer join)
-            .withColumn("bucket", coalesce(col("fresh_bucket"), col("exp_bucket")))
-            .groupBy(col("bucket"))
-            .agg((lit(1.0) - avg(col("sim"))).as("divergence"))
-            .collect()
-            .map(r => r.getInt(0) -> r.getDouble(1)).toMap
-      }
-
-      val now = args.clock()
-      val rows = group.map { b =>
-        val hash = observed.get(s"hash_$b").collect { case l: java.lang.Long => l.longValue() }
-        LineageRow(
-          snapshot_id = args.seed,
-          partition_id = b,
-          partition_hash = hash.map(java.lang.Long.toHexString).getOrElse("0"),
-          doc_count = observed(s"docs_$b").asInstanceOf[Long],
-          span_count = observed(s"spans_$b").asInstanceOf[Long],
-          divergence = divergenceByBucket.getOrElse(b, 0.0),
-          committed_at = now)
-      }
-      Lineage.append(spark, args.out, rows)
-      processedDocs += rows.map(_.doc_count).sum
-      groupsDone += 1
-      heartbeat.groupsDone.add(1L)
-    } finally heartbeat.stop()
-    (todo.size, processedDocs)
+  /** CER-style divergence vs an expected table (north_rule lineage
+    * metric): full-outer span join per bucket; divergence = 1 - avg(nls),
+    * with missing/extra spans scored 0 similarity. 0.0 when byte-identical.
+    */
+  private def divergenceByBucket(spark: SparkSession, out: String, expectedDir: String,
+      group: Seq[Int], buckets: Int): Map[Int, Double] = {
+    // the just-written group partitions ARE the fresh extraction —
+    // a pruned read-back instead of a re-extraction pass
+    val fresh = spark.read.parquet(s"$out/data")
+      .filter(col("bucket").isInCollection(group))
+      .select(col("doc_id"), col("order"), col("text").as("new_text"),
+        col("bucket").as("fresh_bucket"))
+    // the expected table is written partitionBy(bucket) with the same
+    // bucketing, so filtering on the partition column prunes the scan
+    // to this group's directories (round 1 re-scanned the whole table
+    // per group through an unprunable UDF predicate); if the dir has
+    // no bucket column, fall back to the native expression (codegen'd,
+    // still no ScalaUDF, just not prunable)
+    val expRaw = spark.read.parquet(expectedDir)
+    // normalize the partition column's type: an externally written
+    // expected table may carry bucket as BIGINT (e.g. a DuckDB COPY),
+    // and a long surviving through the coalesce below would poison
+    // the getInt on the collected row
+    val expBucketed =
+      if (expRaw.columns.contains("bucket"))
+        expRaw.withColumn("bucket", col("bucket").cast("int"))
+      else expRaw.withColumn("bucket", bucketCol(buckets))
+    val exp = expBucketed
+      .filter(col("bucket").isInCollection(group))
+      .select(col("doc_id"), col("order"), col("text").as("exp_text"),
+        col("bucket").as("exp_bucket"))
+    fresh.join(exp, Seq("doc_id", "order"), "full_outer")
+      .withColumn("sim",
+        when(col("new_text").isNull || col("exp_text").isNull, lit(0.0))
+          .otherwise(graft.functions.ChurroFunctions.nls(col("new_text"), col("exp_text"))))
+      // both sides carry their partition column — reuse it instead of
+      // re-hashing doc_id per span row (coalesce covers the outer join)
+      .withColumn("bucket", coalesce(col("fresh_bucket"), col("exp_bucket")))
+      .groupBy(col("bucket"))
+      .agg((lit(1.0) - avg(col("sim"))).as("divergence"))
+      .collect()
+      .map(r => r.getInt(0) -> r.getDouble(1)).toMap
   }
 
   def main(argv: Array[String]): Unit = {

@@ -405,8 +405,8 @@ object Tier {
 
   /** The crawl chain WarcIngestJob ships (WARC → HTTP unwrap → charset →
     * LENIENT DOM parse → main-content spans + outlinks, per-page
-    * quarantine) over the synthetic crawl, one file per task, counted with
-    * no output write. The crawl is materialized once, untimed, and shared
+    * quarantine) over the synthetic crawl, whole files per task, counted
+    * with no output write. The crawl is materialized once, untimed, and shared
     * across runs and JVMs (idempotent atomic-rename writes).
     */
   private def crawl(spark: SparkSession, rows: Long): Seq[(String, Any)] = {

@@ -1,9 +1,8 @@
 package graft.jobs
 
-import graft.model.LineageRow
 import graft.sources.{Warc, WarcGen}
 import graft.storage.Lineage
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Resumable crawl ingestion: WARC files → HTTP unwrap → charset decode →
@@ -15,12 +14,9 @@ import org.apache.spark.sql.functions._
   *
   * The WARC FILE is the resume unit because it is the atomic unit of crawl
   * ingest: a gzip member stream has no safe split point, so a task owns a
-  * whole file and `partition_id` = file index. Files process in groups; each
-  * group's spans write via dynamic partition overwrite (bucket = file
-  * index) and its lineage rows commit atomically after, so a kill loses at
-  * most one group and a rerun anti-joins committed files — identical
-  * semantics to ExtractJob's bucket groups, proven by the same
-  * crash/resume/no-op spec shape.
+  * whole file and `partition_id` = file index. Files run in groups through
+  * [[ExtractJob.resumable]] (bucket = file index), so a kill loses at most
+  * one group and a rerun skips committed files.
   *
   * Input synthesis ([[WarcGen]]) is itself resumable and idempotent: each
   * missing file writes via tmp + atomic rename, derived only from (seed,
@@ -116,24 +112,20 @@ object WarcIngestJob {
     }
   }
 
-  /** The span and link rows of the crawl files at `paths`, one file per
-    * task: columns (bucket = file index, uri, offset, kind, text,
-    * media_ref). A repartition would shuffle the file BYTES (gigabytes per
-    * group at production segment sizes); instead, with maxPartitionBytes
-    * below the 4 MiB open cost the scan planner refuses to pack two files
-    * into one split, so each task owns one whole file with zero data
-    * movement. The conf must be live at ACTION time (physical scan
-    * planning), and it lives on a CLONED session (newSession shares the
-    * SparkContext but owns its SQLConf) — same reasoning as CompactJob:
-    * mutating the caller's session would silently re-split every
-    * concurrently planned scan to this 1 MiB target, and a save/restore is
-    * not exception-safe against other threads' conf sets.
+  /** The span and link rows of the crawl files at `paths`: columns
+    * (bucket = file index, uri, offset, kind, text, media_ref). A
+    * repartition would shuffle the file BYTES (gigabytes per group at
+    * production segment sizes); instead the scan hands each task whole
+    * files with zero data movement — `binaryFile` never splits a file, and
+    * the planner packs files only up to its split size (at most 128 MiB,
+    * at least the 4 MiB open cost), so a production segment is one task
+    * and small files share one. The default split conf suffices, so there
+    * is no conf to isolate on a cloned session (whose fresh session state
+    * cost ~0.2 s per call).
     */
   def pageRows(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    val iso = spark.newSession()
-    iso.conf.set("spark.sql.files.maxPartitionBytes", s"${1 << 20}")
-    import iso.implicits._
-    iso.read.format("binaryFile").load(paths: _*)
+    import spark.implicits._
+    spark.read.format("binaryFile").load(paths: _*)
       .withColumn("name", element_at(split(col("path"), "/"), -1))
       .select(col("name"), col("content"))
       .as[(String, Array[Byte])]
@@ -190,55 +182,18 @@ object WarcIngestJob {
   /** One resumable run. Returns (processedFiles, extractedPages, quarantinedPages). */
   def run(spark: SparkSession, args: Args): (Int, Long, Long) = {
     materializeCrawl(spark, args)
-    val committed = Lineage.committedPartitions(spark, args.out)
-    val todo = (0 until args.files).filterNot(f => committed.contains(f.toLong))
-    var pagesDone = 0L
-    var errorsDone = 0L
-    var groupsDone = 0
-    todo.grouped(args.groupSize).foreach { group =>
-      if (args.failAfterGroups >= 0 && groupsDone >= args.failAfterGroups)
-        throw new RuntimeException(s"injected failure after $groupsDone groups")
+    val stats = ExtractJob.UnitStats(
+      spans = !col("kind").isin("error", "link", "empty"),
+      // zero-span pages count as processed pages via their marker row
+      docs = (col("offset") === 0 && col("kind") =!= "link") || col("kind") === "empty",
+      errors = col("kind") === "error",
+      hashed = col("offset") === 0 && col("kind") =!= "link",
+      key = col("uri"))
+    val rows = ExtractJob.resumable(spark, args.out, 0 until args.files, args.groupSize,
+        args.seed, args.failAfterGroups, failAfterWrite = -1, args.clock) { (group, _, _) =>
       // the scan reads EXACTLY this group's files — path-list pruning
-      val spans = pageRows(spark, group.map(f => filePath(args.out, f)))
-      val obs = org.apache.spark.sql.Observation(s"warc_stats_$groupsDone")
-      val statCols: Seq[org.apache.spark.sql.Column] = group.toSeq.flatMap { f =>
-        // coalesce: SUM over a ZERO-row frame is NULL (the otherwise(0L)
-        // never fires) — a group whose every record fails isHtml200 must
-        // commit zero counts, not NPE the resumable job on every rerun
-        Seq(
-          coalesce(sum(when(col("bucket") === f && !col("kind").isin("error", "link", "empty"), 1L).otherwise(0L)), lit(0L)).as(s"spans_$f"),
-          // zero-span pages count as processed pages via their marker row
-          coalesce(sum(when(col("bucket") === f &&
-            ((col("offset") === 0 && col("kind") =!= "link") || col("kind") === "empty"), 1L).otherwise(0L)), lit(0L)).as(s"pages_$f"),
-          coalesce(sum(when(col("bucket") === f && col("kind") === "error", 1L).otherwise(0L)), lit(0L)).as(s"errors_$f"),
-          expr(s"bit_xor(CASE WHEN bucket = $f AND offset = 0 AND kind <> 'link' THEN xxhash64(uri) END)").as(s"hash_$f"))
-      }
-      val out = spans.observe(obs, statCols.head, statCols.tail: _*)
-      // idempotent group write: dynamic overwrite replaces exactly this
-      // group's file-partitions, so a crash between write and lineage
-      // commit cannot duplicate rows on resume
-      out.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket").parquet(s"${args.out}/data")
-      val observed: Map[String, Any] = obs.get
-
-      val now = args.clock()
-      val rows = group.map { f =>
-        val hash = observed.get(s"hash_$f").collect { case l: java.lang.Long => l.longValue() }
-        LineageRow(
-          snapshot_id = args.seed,
-          partition_id = f,
-          partition_hash = hash.map(java.lang.Long.toHexString).getOrElse("0"),
-          doc_count = observed(s"pages_$f").asInstanceOf[Long],
-          span_count = observed(s"spans_$f").asInstanceOf[Long],
-          divergence = 0.0,
-          committed_at = now,
-          error_count = observed(s"errors_$f").asInstanceOf[Long])
-      }
-      Lineage.append(spark, args.out, rows)
-      pagesDone += rows.map(_.doc_count).sum
-      errorsDone += rows.map(_.error_count).sum
-      groupsDone += 1
+      ExtractJob.GroupWrite(pageRows(spark, group.map(f => filePath(args.out, f))),
+        s"${args.out}/data", Some("bucket"), stats)
     }
     // once EVERY file is committed, publish the docs-shaped snapshot AND
     // the crawl frontier for the next fetch wave. Snapshot directories are
@@ -268,7 +223,7 @@ object WarcIngestJob {
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
     }
-    (todo.size, pagesDone, errorsDone)
+    (rows.size, rows.map(_.doc_count).sum, rows.map(_.error_count).sum)
   }
 
   /** Publish the next fetch wave's input: every followable outlink the

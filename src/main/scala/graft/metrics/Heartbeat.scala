@@ -7,13 +7,16 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /** Per-run progress surface — the Spark-native analogue of the reference's
-  * tqdm heartbeat thread (`/root/reference/tooling/benchmarking/
-  * benchmark.py:454-475`, 1 s postfix refresh): executors bump shared
-  * accumulators as documents/spans complete; a driver-side daemon thread
-  * appends one JSON line per tick to `<out>/progress.jsonl`, readable
-  * mid-run by any consumer (`tail -f`). Cluster metrics (completed stages /
-  * tasks) come from a SparkListener, so the surface also moves during
-  * shuffle/write phases that don't touch the row counters.
+  * tqdm heartbeat thread (`tooling/benchmarking/benchmark.py:454-475`, 1 s
+  * postfix refresh): a driver-side daemon thread appends one JSON line per
+  * tick to `<out>/progress.jsonl`, readable mid-run by any consumer
+  * (`tail -f`). [[graft.jobs.ExtractJob.resumable]] runs one per job run,
+  * so every resumable job writes it, and bumps `groups` once per lineage
+  * commit. `docs`/`spans` are extraction counters: executors bump them as
+  * documents complete in `Extract.run`, so they stay 0 in jobs that do not
+  * extract. Cluster metrics (completed stages / tasks) come from a
+  * SparkListener, so the surface also moves during shuffle/write phases
+  * that don't touch the row counters.
   */
 final class Heartbeat(spark: SparkSession, outDir: String, intervalMs: Long = 1000L) {
 

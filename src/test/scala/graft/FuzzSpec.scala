@@ -36,14 +36,28 @@ class FuzzSpec extends AnyFunSuite {
     out
   }
 
-  /** Run one parse attempt; only success or a contextual IAE is legal. */
-  private def legal(label: String)(body: => Unit): Unit =
+  /** Wall-clock budget of one parse attempt: over 100× the slowest attempt
+    * measured on a 4-core host (~146 ms, a mutated PDF through the
+    * rasterizer), so a quasi-hang fails with its label instead of passing
+    * slowly.
+    */
+  private val AttemptBudgetNanos = 15L * 1000 * 1000 * 1000
+
+  /** Run one parse attempt; only success or a contextual IAE, within the
+    * budget, is legal.
+    */
+  private def legal(label: String)(body: => Unit): Unit = {
+    val t0 = System.nanoTime()
     try body
     catch {
       case _: IllegalArgumentException => () // the contract: loud, typed
       case e: Throwable =>
         fail(s"$label escaped with ${e.getClass.getName}: ${e.getMessage}")
     }
+    val ns = System.nanoTime() - t0
+    if (ns > AttemptBudgetNanos)
+      fail(f"$label took ${ns / 1e9}%.1f s, over the ${AttemptBudgetNanos / 1e9}%.0f s budget")
+  }
 
   test("WARC reader: random soup and mutated valid captures only ever throw IAE") {
     val valid = java.nio.file.Files.readAllBytes(

@@ -1,6 +1,6 @@
 package graft
 
-import graft.jobs.ExtractJob
+import graft.jobs.{DataPrepJob, ExtractJob, WarcIngestJob}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -22,14 +22,15 @@ class HeartbeatSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  private def field(l: String, k: String): Long =
+    s""""$k":(\\d+)""".r.findFirstMatchIn(l).get.group(1).toLong
+
   test("progress.jsonl: monotone counters, exact closing totals, mid-run stage activity") {
     val out = Files.createTempDirectory("graft_hb").toString
     ExtractJob.run(spark, ExtractJob.Args(nDocs = 300, buckets = 4, groupSize = 2,
       out = out, clock = () => 1L))
     val lines = Files.readAllLines(Paths.get(s"$out/progress.jsonl")).asScala
     assert(lines.nonEmpty)
-    def field(l: String, k: String): Long =
-      s""""$k":(\\d+)""".r.findFirstMatchIn(l).get.group(1).toLong
     val docs = lines.map(field(_, "docs"))
     assert(docs.zip(docs.tail).forall { case (a, b) => a <= b }, "docs counter must be monotone")
     val last = lines.last
@@ -41,5 +42,24 @@ class HeartbeatSpec extends AnyFunSuite with BeforeAndAfterAll {
     val spans = field(last, "spans")
     val actualSpans = spark.read.parquet(s"$out/data").count()
     assert(spans == actualSpans, s"spans=$spans actual=$actualSpans")
+
+    // the crawl ingest and the data-prep stages commit through the same
+    // loop, so they write the same surface: 6 files in groups of 2, 6 stages
+    val warcOut = Files.createTempDirectory("graft_hb_warc").toString
+    val prepOut = Files.createTempDirectory("graft_hb_prep").toString
+    Seq(
+      (warcOut, 3L, () => WarcIngestJob.run(spark, WarcIngestJob.Args(files = 6,
+        pagesPerFile = 12, groupSize = 2, out = warcOut, clock = () => 1L))),
+      (prepOut, 6L, () => DataPrepJob.run(spark, DataPrepJob.Args(out = prepOut, clock = () => 1L)))
+    ).foreach { case (dir, committedGroups, runJob) =>
+      runJob()
+      val path = Paths.get(s"$dir/progress.jsonl")
+      assert(Files.exists(path), s"$dir wrote no progress.jsonl")
+      val lines = Files.readAllLines(path).asScala
+      val groups = lines.map(field(_, "groups"))
+      assert(groups.zip(groups.tail).forall { case (a, b) => a <= b }, s"$dir: groups decreased")
+      assert(groups.last == committedGroups, lines.last)
+      assert(field(lines.last, "stages") > 0 && field(lines.last, "tasks") > 0, lines.last)
+    }
   }
 }

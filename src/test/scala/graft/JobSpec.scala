@@ -233,6 +233,17 @@ class JobSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // per-stage monotonic shrink: every dedup/filter stage keeps ≤ its input
     val lin = Lineage.read(spark, outA).collect().sortBy(_.partition_id)
+    // the stats observed during each stage write equal a read-back of the
+    // committed snapshot: its row count and its order-insensitive id hash
+    lin.foreach { r =>
+      val snap = spark.read.parquet(s"$outA/stage_${r.partition_id}").agg(
+        org.apache.spark.sql.functions.count(lit(1)),
+        org.apache.spark.sql.functions.expr("bit_xor(xxhash64(CAST(doc_id AS STRING)))"))
+        .collect()(0)
+      assert(r.span_count == snap.getLong(0), s"stage ${r.partition_id}: $r vs $snap")
+      val hash = if (snap.isNullAt(1)) "0" else java.lang.Long.toHexString(snap.getLong(1))
+      assert(r.partition_hash == hash, s"stage ${r.partition_id}: $r vs $snap")
+    }
     lin.take(4).foreach(r =>
       assert(r.span_count <= r.doc_count || r.partition_id == 0,
         s"stage ${r.partition_id} grew: ${r.doc_count} -> ${r.span_count}"))

@@ -48,6 +48,21 @@ class SwitchesSpec extends AnyFunSuite {
     assert(coreReaders == owners)
   }
 
+  test("one commit protocol: only ExtractJob.resumable and CompactJob commit lineage or overwrite partitions") {
+    val commit = """Lineage\.append\(|partitionOverwriteMode""".r
+    val member = """^  (?:private )?def (\w+).*""".r
+    val sites = mainSources.flatMap { p =>
+      val lines = Files.readAllLines(p).asScala
+      lines.indices.filter(i => commit.findFirstIn(lines(i)).isDefined).map { i =>
+        // the nearest object member defined above the match names the site
+        val owner = (i to 0 by -1).iterator.map(lines(_)).collectFirst { case member(name) => name }
+        s"${p.getFileName}:${owner.getOrElse("?")}"
+      }
+    }.toSet
+    assert(sites.contains("ExtractJob.scala:resumable"))
+    assert(sites.forall(s => s == "ExtractJob.scala:resumable" || s.startsWith("CompactJob.scala:")), sites)
+  }
+
   test("every graft main named in the tooling scripts and the verify notes exists") {
     val scripts = {
       val ls = Files.list(Paths.get("tools"))
