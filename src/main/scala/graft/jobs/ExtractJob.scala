@@ -174,6 +174,7 @@ object ExtractJob {
             divergence = 0.0, committed_at = now, error_count = n("errors"))
         })
         Lineage.append(spark, out, rows)
+        heartbeat.rowsDone.add(rows.map(_.span_count).sum)
         committed ++= rows.map(r => r.partition_id -> r)
         fresh ++= rows
         heartbeat.groupsDone.add(1L)

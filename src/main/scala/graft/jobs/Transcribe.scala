@@ -9,16 +9,15 @@ import org.apache.spark.sql.Dataset
   * (`/root/reference/src/churro_ocr/cli.py:163-188,243-250`) over the docs
   * table: render one document (or the first N) to reading-order Markdown,
   * to stdout or per-doc files. Media spans print their `media_ref` (the
-  * reference prints image paths; pixels flow through the PNG page sink,
-  * `Sinks.writePngPages`).
+  * reference prints image paths).
   *
   *   runMain graft.jobs.Transcribe --input <parquet dir> --doc doc_00000007
   *   runMain graft.jobs.Transcribe --docs 100 --out /tmp/md   # generate+render
   *
   * The `.collect()` below is deliberate CLI parity, not a data path: the
   * reference CLI prints a handful of documents to a terminal. Bulk output
-  * at scale goes through the distributed sinks (`ExtractJob`,
-  * `Sinks.writeOutputsDistributed`), never through this main.
+  * at scale goes through `ExtractJob`'s partitioned write, never through
+  * this main.
   */
 object Transcribe {
 

@@ -1,8 +1,10 @@
 package graft.media
 
-/** Built-in 5×7 bitmap glyph font for the table-mask token labels.
+/** Built-in 5×7 bitmap glyph font: the PDF rasterizer's text and the
+  * classical-OCR templates ([[graft.layout.GlyphOcr]]).
   *
-  * The reference draws each token label onto the masked table region with a
+  * Its label drawing follows the reference, which draws each table-image
+  * token label onto the masked table region with a
   * system TrueType font (`/root/reference/src/churro_ocr/providers/_mineru25.py:566-574`
   * — size it to 70% of the box, center it, draw in the
   * luminance-contrasting color). No fonts ship in this sandbox, so the

@@ -181,29 +181,6 @@ object ImageDecode {
   def loadImage(bytes: Array[Byte]): Decoded =
     applyOrientation(decode(bytes), exifOrientation(bytes))
 
-  /** Exact pixel crop (left, top, right, bottom), clamped like PIL. */
-  def crop(d: Decoded, left: Int, top: Int, right: Int, bottom: Int): Decoded = {
-    val l = math.max(0, left); val t = math.max(0, top)
-    val r = math.min(d.width, right); val b = math.min(d.height, bottom)
-    val (w, h) = (math.max(0, r - l), math.max(0, b - t))
-    val out = new Array[Byte](w * h * 3)
-    var y = 0
-    while (y < h) {
-      System.arraycopy(d.rgb, ((t + y) * d.width + l) * 3, out, y * w * 3, w * 3)
-      y += 1
-    }
-    Decoded(w, h, out)
-  }
-
-  /** Bicubic resize — Pillow-exact via [[PilResample]] (the fixed-point
-    * Resample.c pipeline, Keys a = −0.5, differentially golden-verified
-    * against the independent twin in tools/gen_resample_fixture.py). The
-    * round-3 Graphics2D implementation was "real but PIL-bit-inexact";
-    * this one reproduces Pillow's bytes.
-    */
-  def resizeBicubic(d: Decoded, tw: Int, th: Int): Decoded =
-    PilResample.resize(d, tw, th)
-
   /** Exact integer per-channel pixel sums (feature extraction primitive —
     * channel means follow as one double division, reproducible everywhere).
     */
@@ -218,35 +195,6 @@ object ImageDecode {
     }
     (r, g, b)
   }
-
-  /** RGB byte triples → BufferedImage — the ONE pixel-packing definition
-    * every ImageIO encode goes through (PNG sink here, JPEG data URI in
-    * TableMask); a layout fix applied to one copy must not miss the other.
-    */
-  def toBufferedImage(d: Decoded): java.awt.image.BufferedImage = {
-    val img = new java.awt.image.BufferedImage(d.width, d.height,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val px = new Array[Int](d.width * d.height)
-    var i = 0
-    while (i < px.length) {
-      px(i) = ((d.rgb(i * 3) & 0xFF) << 16) | ((d.rgb(i * 3 + 1) & 0xFF) << 8) | (d.rgb(i * 3 + 2) & 0xFF)
-      i += 1
-    }
-    img.setRGB(0, 0, d.width, d.height, px, 0, d.width)
-    img
-  }
-
-  /** Encode RGB pixels with the named ImageIO writer ("png", "jpg"). */
-  def encode(d: Decoded, format: String): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(toBufferedImage(d), format, bos)
-    bos.toByteArray
-  }
-
-  /** Encode RGB pixels as PNG bytes (the `page_%04d.png` sink,
-    * `cli.py:247-250`, now real).
-    */
-  def encodePng(d: Decoded): Array[Byte] = encode(d, "png")
 
   /** `_rotate_image_by_angle` (`_mineru25.py:294-299`): PIL rotate(angle,
     * expand=True) is COUNTERclockwise; non-{90,180,270} angles are identity.
@@ -317,131 +265,5 @@ object ImageDecode {
       y += 1
     }
     Decoded(d.width, d.height, out)
-  }
-
-  /** `_crop_bbox` (`page_detection.py:376-387`): trim-margin expansion with
-    * int() truncation, clamped to the image.
-    */
-  def cropBBox(d: Decoded, bbox: (Double, Double, Double, Double), trimMargin: Int): Decoded = {
-    val l = math.max((bbox._1 - trimMargin).toInt, 0)
-    val t = math.max((bbox._2 - trimMargin).toInt, 0)
-    val r = math.min((bbox._3 + trimMargin).toInt, d.width)
-    val b = math.min((bbox._4 + trimMargin).toInt, d.height)
-    crop(d, l, t, r, b)
-  }
-
-  /** `_crop_polygon` (`page_detection.py:390-409`): bbox crop, then pixels
-    * outside the polygon go white. The polygon fill is an even-odd scanline
-    * rasterizer with boundary inclusion (PIL's ImageDraw.polygon is the
-    * model; its exact edge AA rules are implementation-defined and PIL is
-    * unavailable here — interior/exterior semantics are property-tested,
-    * rectangle polygons are exact).
-    */
-  def cropPolygon(d: Decoded, polygon: Seq[(Double, Double)], trimMargin: Int): Decoded = {
-    val xs = polygon.map(_._1); val ys = polygon.map(_._2)
-    val bbox = (xs.min, ys.min, xs.max, ys.max)
-    val cropped = cropBBox(d, bbox, trimMargin)
-    val left = math.max((bbox._1 - trimMargin).toInt, 0)
-    val top = math.max((bbox._2 - trimMargin).toInt, 0)
-    val rel = polygon.map { case (x, y) => (x - left, y - top) }
-    val out = cropped.rgb.clone()
-    var y = 0
-    while (y < cropped.height) {
-      var x = 0
-      while (x < cropped.width) {
-        if (!pointInPolygon(x + 0.5, y + 0.5, rel) && !onPolygonBoundary(x, y, rel)) {
-          val i = (y * cropped.width + x) * 3
-          out(i) = -1; out(i + 1) = -1; out(i + 2) = -1 // 0xFF white
-        }
-        x += 1
-      }
-      y += 1
-    }
-    Decoded(cropped.width, cropped.height, out)
-  }
-
-  private def pointInPolygon(px: Double, py: Double, poly: Seq[(Double, Double)]): Boolean = {
-    var inside = false
-    var j = poly.length - 1
-    var i = 0
-    while (i < poly.length) {
-      val (xi, yi) = poly(i); val (xj, yj) = poly(j)
-      if ((yi > py) != (yj > py) && px < (xj - xi) * (py - yi) / (yj - yi) + xi) inside = !inside
-      j = i
-      i += 1
-    }
-    inside
-  }
-
-  private def onPolygonBoundary(x: Int, y: Int, poly: Seq[(Double, Double)]): Boolean = {
-    var j = poly.length - 1
-    var i = 0
-    while (i < poly.length) {
-      val (xi, yi) = poly(i); val (xj, yj) = poly(j)
-      val minX = math.min(xi, xj); val maxX = math.max(xi, xj)
-      val minY = math.min(yi, yj); val maxY = math.max(yi, yj)
-      if (x >= minX - 0.5 && x <= maxX + 0.5 && y >= minY - 0.5 && y <= maxY + 0.5) {
-        val dx = xj - xi; val dy = yj - yi
-        val dist =
-          if (dx == 0 && dy == 0) math.hypot(x - xi, y - yi)
-          else {
-            val t = math.max(0.0, math.min(1.0, ((x - xi) * dx + (y - yi) * dy) / (dx * dx + dy * dy)))
-            math.hypot(x - (xi + t * dx), y - (yi + t * dy))
-          }
-        if (dist <= 0.5) return true
-      }
-      j = i
-      i += 1
-    }
-    false
-  }
-
-  /** `_qianfan_dynamic_preprocess` + `_qianfan_load_pixel_values`
-    * (`hf.py:179-245`): resize to the tile grid, crop the 448-px tiles,
-    * optionally append the thumbnail, normalize each tile to a CHW float32
-    * tensor. The batch shape is (nImages, 3, 448, 448).
-    */
-  def qianfanPixelValues(d: Decoded): Seq[Array[Float]] = {
-    val plan = ImagePrep.qianfanTiles(d.width, d.height)
-    val resized = resizeBicubic(d, plan.targetW, plan.targetH)
-    val tiles = plan.boxes.map { case (l, t, r, b) => crop(resized, l, t, r, b) }
-    val all = if (plan.thumbnail)
-      tiles :+ resizeBicubic(d, ImagePrep.QianfanImageSize, ImagePrep.QianfanImageSize)
-    else tiles
-    all.map(t => ImagePrep.qianfanNormalizeChw(t.rgb, t.width, t.height))
-  }
-
-  /** Build a minimal APP1 EXIF segment carrying only the orientation tag —
-    * used to splice EXIF into ImageIO-encoded JPEGs in tests (ImageIO cannot
-    * write EXIF itself).
-    */
-  def exifSegment(orientation: Int, littleEndian: Boolean): Array[Byte] = {
-    val b = java.nio.ByteBuffer.allocate(32)
-      .order(if (littleEndian) java.nio.ByteOrder.LITTLE_ENDIAN else java.nio.ByteOrder.BIG_ENDIAN)
-    b.put("Exif".getBytes); b.put(0.toByte); b.put(0.toByte)
-    b.put((if (littleEndian) "II" else "MM").getBytes)
-    b.putShort(0x2A.toShort)
-    b.putInt(8) // IFD0 right after header
-    b.putShort(1.toShort) // one entry
-    b.putShort(0x0112.toShort)
-    b.putShort(3.toShort) // SHORT
-    b.putInt(1)
-    b.putShort(orientation.toShort)
-    b.putShort(0.toShort)
-    b.putInt(0) // next-IFD pointer: none
-    b.array()
-  }
-
-  /** Splice an APP1 segment right after SOI in a JPEG byte stream. */
-  def spliceApp1(jpeg: Array[Byte], payload: Array[Byte]): Array[Byte] = {
-    require(isJpeg(jpeg))
-    val len = payload.length + 2
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(jpeg, 0, 2)
-    out.write(0xFF); out.write(0xE1)
-    out.write((len >> 8) & 0xFF); out.write(len & 0xFF)
-    out.write(payload)
-    out.write(jpeg, 2, jpeg.length - 2)
-    out.toByteArray
   }
 }

@@ -11,10 +11,11 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * postfix refresh): a driver-side daemon thread appends one JSON line per
   * tick to `<out>/progress.jsonl`, readable mid-run by any consumer
   * (`tail -f`). [[graft.jobs.ExtractJob.resumable]] runs one per job run,
-  * so every resumable job writes it, and bumps `groups` once per lineage
-  * commit. `docs`/`spans` are extraction counters: executors bump them as
-  * documents complete in `Extract.run`, so they stay 0 in jobs that do not
-  * extract. Cluster metrics (completed stages / tasks) come from a
+  * so every resumable job writes it, and per lineage commit bumps `groups`
+  * by one and `rows` by the group's committed `span_count`, so `rows` moves
+  * in every job. `docs`/`spans` are extraction counters: executors bump them
+  * as documents complete in `Extract.run`, so they stay 0 in jobs that do
+  * not extract. Cluster metrics (completed stages / tasks) come from a
   * SparkListener, so the surface also moves during shuffle/write phases
   * that don't touch the row counters.
   */
@@ -23,6 +24,7 @@ final class Heartbeat(spark: SparkSession, outDir: String, intervalMs: Long = 10
   val docsDone: LongAccumulator = spark.sparkContext.longAccumulator("graft.docs_done")
   val spansDone: LongAccumulator = spark.sparkContext.longAccumulator("graft.spans_done")
   val groupsDone: LongAccumulator = spark.sparkContext.longAccumulator("graft.groups_done")
+  val rowsDone: LongAccumulator = spark.sparkContext.longAccumulator("graft.rows_done")
 
   @volatile private var stages = 0L
   @volatile private var tasks = 0L
@@ -38,7 +40,8 @@ final class Heartbeat(spark: SparkSession, outDir: String, intervalMs: Long = 10
   private def tick(): Unit = {
     val line = s"""{"elapsed_sec":${(System.nanoTime() - t0) / 1e9},""" +
       s""""docs":${docsDone.value},"spans":${spansDone.value},""" +
-      s""""groups":${groupsDone.value},"stages":$stages,"tasks":$tasks}""" + "\n"
+      s""""groups":${groupsDone.value},"rows":${rowsDone.value},""" +
+      s""""stages":$stages,"tasks":$tasks}""" + "\n"
     Files.write(path, line.getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }

@@ -74,18 +74,6 @@ object CacheTracker {
   /** Number of live tracked handles on this thread (spec observability). */
   def liveCount: Int = live.get().size()
 
-  /** Handles tracked on OTHER threads and not yet released there (spec /
-    * teardown observability). Counts only strongly-reachable strays — a
-    * GC'd handle's blocks are still released by Spark's ContextCleaner.
-    */
-  def strayCount: Int = global.synchronized {
-    val mine = live.get()
-    var n = 0
-    val it = global.keySet().iterator()
-    while (it.hasNext) { if (!mine.contains(it.next())) n += 1 }
-    n
-  }
-
   def releaseAll(): Unit = {
     val q = live.get()
     var d = q.poll()

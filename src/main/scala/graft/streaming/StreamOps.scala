@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -305,126 +305,5 @@ object StreamOps {
     spark2.table(queryName)
       .select(col("doc_id").as("dup_id")).distinct()
       .orderBy("dup_id")
-  }
-
-  /** One closed user session: the custom-state shape the brief calls for
-    * (`flatMapGroupsWithState` + event-time timeout). Gap-based
-    * sessionization: events of one user belong to one session while they
-    * arrive within `gapMs`; the session row is emitted when the watermark
-    * passes the gap.
-    */
-  final case class SessionEvent(user_id: Long, ts: java.sql.Timestamp, value: Double)
-  final case class SessionState(start: Long, end: Long, n: Long, sum: Double)
-  /** A user's OPEN sessions. A list, not a scalar: a late-but-admissible
-    * event can belong to a SEPARATE earlier session (t < start − gap of the
-    * current one) or can extend the current session backward — a
-    * single-session state either absorbed it (wrong counts, lost session
-    * row) or, in the old emit-on-split form, had already emitted a session
-    * a late event was still allowed to touch.
-    */
-  final case class SessionsState(sessions: Seq[SessionState])
-  final case class SessionOut(user_id: Long, session_start: java.sql.Timestamp,
-                              session_end: java.sql.Timestamp, n_events: Long, sum_value: Double)
-
-  def sessionizeFn(gapMs: Long)(
-      userId: Long,
-      events: Iterator[SessionEvent],
-      state: GroupState[SessionsState]): Iterator[SessionOut] = {
-    def toOut(s: SessionState) = SessionOut(userId, new java.sql.Timestamp(s.start),
-      new java.sql.Timestamp(s.end), s.n, s.sum)
-    if (state.hasTimedOut) {
-      // the timeout is armed at the EARLIEST open session's close — emit
-      // everything the watermark has passed and re-arm for the next one
-      // (an active user's old sessions must not wait for the whole key to
-      // go idle)
-      val wm = state.getCurrentWatermarkMs()
-      val ss = state.get.sessions.toVector.sortBy(_.start)
-      // STRICT <, same as the data branch below: Spark admits events with
-      // ts == watermark, and such an event satisfies t <= end + gap when
-      // end + gap == wm — emitting at equality would close a session an
-      // admissible event can still legally extend (two overlapping session
-      // rows where the batch oracle has one)
-      val (closed, open) = ss.partition(_.end + gapMs < wm)
-      if (open.nonEmpty) {
-        state.update(SessionsState(open))
-        state.setTimeoutTimestamp(math.max(open.map(_.end + gapMs).min, wm + 1))
-      } else state.remove()
-      closed.iterator.map(toOut)
-    } else {
-      val sorted = events.toSeq.sortBy(_.ts.getTime)
-      var sessions = state.getOption.map(_.sessions.toVector).getOrElse(Vector.empty)
-      sorted.foreach { e =>
-        val t = e.ts.getTime
-        // an event joins a session it is within gap of ON EITHER SIDE —
-        // min() extends start backward for a late first event
-        val idx = sessions.indexWhere(s => t >= s.start - gapMs && t <= s.end + gapMs)
-        if (idx >= 0) {
-          val s = sessions(idx)
-          sessions = sessions.updated(idx, SessionState(math.min(s.start, t),
-            math.max(s.end, t), s.n + 1, s.sum + e.value))
-        } else sessions :+= SessionState(t, t, 1, e.value)
-      }
-      // one event can BRIDGE two previously-separate sessions: coalesce
-      val merged = sessions.sortBy(_.start)
-        .foldLeft(Vector.empty[SessionState]) { (acc, s) =>
-          acc.lastOption match {
-            case Some(p) if s.start - p.end <= gapMs =>
-              acc.init :+ SessionState(p.start, math.max(p.end, s.end),
-                p.n + s.n, p.sum + s.sum)
-            case _ => acc :+ s
-          }
-        }
-      // emit ONLY sessions the watermark has closed (end + gap < wm means
-      // no admissible event can still extend or precede-into them) — the
-      // old emit-on-split emitted as soon as a later event arrived, which a
-      // late-but-above-watermark event could contradict
-      val wm = state.getCurrentWatermarkMs()
-      val (closed, open) = merged.partition(_.end + gapMs < wm)
-      if (open.nonEmpty) {
-        state.update(SessionsState(open))
-        // arm at the EARLIEST close, not the latest: each firing emits the
-        // sessions the watermark has passed and re-arms for the next
-        state.setTimeoutTimestamp(math.max(open.map(_.end + gapMs).min, wm + 1))
-      } else state.remove()
-      closed.sortBy(_.start).iterator.map(toOut)
-    }
-  }
-
-  /** Streaming-ingest form of the FLAGSHIP extraction: `readStream` over the
-    * docs table → the same narrow per-document extraction → checkpointed
-    * parquet sink. Extraction is stateless (row-local), so the streaming
-    * plan needs no watermark or state store — each micro-batch is exactly
-    * the batch job on its file slice, and the checkpoint gives the same
-    * at-least-once-commit/no-recompute resume property the batch job's
-    * lineage table provides.
-    */
-  def streamExtract(spark: SparkSession, inputDir: String, outDir: String,
-                    checkpointDir: String): Unit = {
-    import spark.implicits._
-    val schema = spark.read.parquet(inputDir).schema
-    val docs = spark.readStream.schema(schema).parquet(inputDir).as[graft.model.Doc]
-    val extracted = graft.pipeline.Extract.run(docs)
-      .select(col("doc_id"), explode(col("spans")).as("s"))
-      .select(col("doc_id"), col("s.order").as("order"), col("s.kind").as("kind"),
-        col("s.media_ref").as("media_ref"), col("s.text").as("text"))
-    val q = extracted.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
-  }
-
-  /** Streaming gap sessionization over `(user_id, ts, value)` events. */
-  def sessionize(events: Dataset[SessionEvent], gapMs: Long,
-                 watermark: String = "1 hour"): Dataset[SessionOut] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        sessionizeFn(gapMs))
   }
 }

@@ -81,31 +81,6 @@ object ChatScaffold {
     if (m.matches()) PyStr.strip(m.group(3)) else cleaned
   }
 
-  /** Trailing stop-token loop (≤8 iterations, one token removed per round),
-    * as in firered/nanonets/qianfan/glm postprocessors
-    * (`_ocr_processing.py:187-268`).
-    */
-  def stripTrailingStopTokens(text: String, tokens: Seq[String]): String = {
-    var cleaned = text
-    var round = 0
-    var changed = true
-    while (round < 8 && changed) {
-      round += 1
-      val previous = cleaned
-      val it = tokens.iterator
-      var removed = false
-      while (it.hasNext && !removed) {
-        val token = it.next()
-        if (cleaned.endsWith(token)) {
-          cleaned = PyStr.rstrip(cleaned.substring(0, cleaned.length - token.length))
-          removed = true
-        }
-      }
-      changed = cleaned != previous
-    }
-    cleaned
-  }
-
   val Mineru25StopTokens: Seq[String] = Seq("<|im_end|>", "<|endoftext|>")
 
   /** `_trim_stop_strings` — cut at the first stop token, then strip. */
@@ -116,13 +91,5 @@ object ChatScaffold {
       if (i >= 0) cleaned = cleaned.substring(0, i)
     }
     PyStr.strip(cleaned)
-  }
-
-  /** DeepSeek-style unbounded trailing stop-token strip (`:241-254`). */
-  def stripTrailingStopTokenAll(text: String, token: String): String = {
-    var cleaned = PyStr.strip(text)
-    while (cleaned.endsWith(token))
-      cleaned = PyStr.rstrip(cleaned.substring(0, cleaned.length - token.length))
-    cleaned
   }
 }

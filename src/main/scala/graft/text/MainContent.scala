@@ -145,21 +145,6 @@ object MainContent {
     (best, bestScore)
   }
 
-  /** Flatten an element's inline content to text: text nodes verbatim,
-    * `<br>` → newline, chrome subtrees skipped, then trimmed at the edges.
-    */
-  private def inlineText(e: Elem): String = {
-    val sb = new java.lang.StringBuilder
-    def walk(x: Elem): Unit = x.children.foreach {
-      case Text(d) => sb.append(d)
-      case c: Elem if isChrome(c) => ()
-      case c: Elem if c.tag == "br" => sb.append('\n')
-      case c: Elem => walk(c)
-    }
-    walk(e)
-    sb.toString.trim
-  }
-
   /** Walk the chosen container into interleaved spans (document order). */
   private def spansOf(container: Elem): Vector[Span] = {
     val out = Vector.newBuilder[Span]

@@ -162,16 +162,4 @@ object MarkupStrip {
     }
     PyStr.strip(normalized.result().mkString("\n"))
   }
-
-  /** `/root/reference/src/churro_ocr/prompts/ocr.py:213-219` */
-  def parseOlmocrResponse(text: String): (String, Vector[(String, FrontMatter.FmValue)], String) = {
-    val (fm, body) = FrontMatter.extract(text)
-    (toPlainText(body), fm, body)
-  }
-
-  /** `/root/reference/src/churro_ocr/prompts/ocr.py:222-227` */
-  def parseChandraResponse(text: String): (String, String) = {
-    val rawHtml = PyStr.strip(text)
-    (toPlainText(rawHtml), rawHtml)
-  }
 }

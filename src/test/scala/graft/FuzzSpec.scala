@@ -237,7 +237,7 @@ class FuzzSpec extends AnyFunSuite {
     for (y <- 0 until 8; x <- 0 until 12) img.setRGB(x, y, (x << 16) | (y << 8))
     val bos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "jpg", bos)
-    val jpeg = ImageDecode.spliceApp1(bos.toByteArray, ImageDecode.exifSegment(6, littleEndian = true))
+    val jpeg = ImageFixtures.spliceApp1(bos.toByteArray, ImageFixtures.exifSegment(6, littleEndian = true))
     (0 until 300).foreach { k =>
       val (src, label) = if (k % 2 == 0) (png, "png") else (jpeg, "jpeg")
       val pos = ((mix(0x5eed + k.toLong) >>> 1) % src.length).toInt

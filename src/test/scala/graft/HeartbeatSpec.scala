@@ -1,6 +1,7 @@
 package graft
 
 import graft.jobs.{DataPrepJob, ExtractJob, WarcIngestJob}
+import graft.storage.Lineage
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -25,6 +26,16 @@ class HeartbeatSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def field(l: String, k: String): Long =
     s""""$k":(\\d+)""".r.findFirstMatchIn(l).get.group(1).toLong
 
+  /** The closing `rows` is the run's committed span_count total, and the
+    * counter never decreases.
+    */
+  private def assertRowsMatchLineage(dir: String, lines: Seq[String]): Unit = {
+    val rows = lines.map(field(_, "rows"))
+    assert(rows.zip(rows.tail).forall { case (a, b) => a <= b }, s"$dir: rows decreased")
+    val committed = Lineage.read(spark, dir).collect().map(_.span_count).sum
+    assert(rows.last == committed && committed > 0, s"$dir: rows=${rows.last} lineage=$committed")
+  }
+
   test("progress.jsonl: monotone counters, exact closing totals, mid-run stage activity") {
     val out = Files.createTempDirectory("graft_hb").toString
     ExtractJob.run(spark, ExtractJob.Args(nDocs = 300, buckets = 4, groupSize = 2,
@@ -42,6 +53,7 @@ class HeartbeatSpec extends AnyFunSuite with BeforeAndAfterAll {
     val spans = field(last, "spans")
     val actualSpans = spark.read.parquet(s"$out/data").count()
     assert(spans == actualSpans, s"spans=$spans actual=$actualSpans")
+    assertRowsMatchLineage(out, lines.toSeq)
 
     // the crawl ingest and the data-prep stages commit through the same
     // loop, so they write the same surface: 6 files in groups of 2, 6 stages
@@ -60,6 +72,7 @@ class HeartbeatSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(groups.zip(groups.tail).forall { case (a, b) => a <= b }, s"$dir: groups decreased")
       assert(groups.last == committedGroups, lines.last)
       assert(field(lines.last, "stages") > 0 && field(lines.last, "tasks") > 0, lines.last)
+      assertRowsMatchLineage(dir, lines.toSeq)
     }
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.ImageFixtures.{encodePng, exifSegment, spliceApp1}
 import graft.media.ImageDecode
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -39,7 +40,7 @@ class ImageDecodeSpec extends AnyFunSuite {
 
   test("EXIF orientation parses from APP1 in both byte orders; absent means 1") {
     for (o <- 1 to 8; le <- Seq(true, false)) {
-      val seg = ImageDecode.exifSegment(o, le)
+      val seg = exifSegment(o, le)
       assert(ImageDecode.orientationFromExifPayload(seg) == o, s"o=$o le=$le")
     }
     assert(ImageDecode.exifOrientation(pngBytes("img_00.png")) == 1) // not a JPEG
@@ -120,27 +121,6 @@ class ImageDecodeSpec extends AnyFunSuite {
     assert(ImageDecode.contrastTextColor((255, 0, 0)) == ((255, 255, 255))) // lum 76.2
   }
 
-  test("crop_bbox trim-margin expansion and crop_polygon white mask") {
-    val d = ImageDecode.Decoded(10, 10, pattern(10, 10, 2))
-    val c = ImageDecode.cropBBox(d, (3.0, 3.0, 7.0, 7.0), trimMargin = 1)
-    assert(c.width == 6 && c.height == 6) // (2,2)..(8,8)
-    // rectangle polygon: mask is exact — inside kept, outside white
-    val poly = Seq((3.0, 3.0), (7.0, 3.0), (7.0, 7.0), (3.0, 7.0))
-    val m = ImageDecode.cropPolygon(d, poly, trimMargin = 1)
-    assert(m.width == 6 && m.height == 6)
-    def px(img: ImageDecode.Decoded, x: Int, y: Int): Seq[Int] =
-      img.rgb.slice((y * img.width + x) * 3, (y * img.width + x) * 3 + 3).map(_ & 0xFF).toSeq
-    // (0,0) of the crop = source (2,2): outside the polygon -> white
-    assert(px(m, 0, 0) == Seq(255, 255, 255))
-    // center of the crop = source (5,5): inside -> original pixel
-    assert(px(m, 3, 3) == px(ImageDecode.crop(d, 2, 2, 8, 8), 3, 3))
-    // triangle polygon: far corner is white, centroid keeps pixels
-    val tri = Seq((3.0, 3.0), (7.0, 3.0), (3.0, 7.0))
-    val t = ImageDecode.cropPolygon(d, tri, trimMargin = 0)
-    assert(px(t, t.width - 1, t.height - 1) == Seq(255, 255, 255))
-    assert(px(t, 1, 1) != Seq(255, 255, 255))
-  }
-
   test("decompression bomb: huge declared dims are rejected from the header, before decode") {
     // a syntactically valid PNG signature + IHDR declaring 100000×100000
     // (30 GB of RGB) in ~60 bytes — the guard must fire off the header
@@ -163,7 +143,7 @@ class ImageDecodeSpec extends AnyFunSuite {
 
   test("PNG round-trip: encodePng output decodes back to identical pixels") {
     val d = ImageDecode.Decoded(7, 5, pattern(7, 5, 3))
-    val back = ImageDecode.loadImage(ImageDecode.encodePng(d))
+    val back = ImageDecode.loadImage(encodePng(d))
     assert(back.width == 7 && back.height == 5 && back.rgb.toSeq == d.rgb.toSeq)
   }
 
@@ -178,7 +158,7 @@ class ImageDecodeSpec extends AnyFunSuite {
     val plain = bos.toByteArray
     val base = ImageDecode.loadImage(plain) // orientation 1
     for (o <- Seq(3, 6, 8); le <- Seq(true, false)) {
-      val withExif = ImageDecode.spliceApp1(plain, ImageDecode.exifSegment(o, le))
+      val withExif = spliceApp1(plain, exifSegment(o, le))
       assert(ImageDecode.exifOrientation(withExif) == o)
       val got = ImageDecode.loadImage(withExif)
       val expect = ImageDecode.applyOrientation(base, o)

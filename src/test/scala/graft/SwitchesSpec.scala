@@ -63,6 +63,54 @@ class SwitchesSpec extends AnyFunSuite {
     assert(sites.forall(s => s == "ExtractJob.scala:resumable" || s.startsWith("CompactJob.scala:")), sites)
   }
 
+  /** Source text with comments (nested block comments too), string and
+    * character literals each blanked to one space: only code is left.
+    */
+  private def codeOnly(s: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    def at(p: String) = s.startsWith(p, i)
+    def skipQuoted(q: Char): Unit = { // from the opening quote to past the closing one
+      i += 1
+      while (i < s.length && s(i) != q && s(i) != '\n') i += (if (s(i) == '\\') 2 else 1)
+      i += 1
+    }
+    while (i < s.length) {
+      val start = i
+      if (at("//")) while (i < s.length && s(i) != '\n') i += 1
+      else if (at("/*")) {
+        var depth = 0
+        do {
+          if (at("/*")) { depth += 1; i += 2 }
+          else if (at("*/")) { depth -= 1; i += 2 }
+          else i += 1
+        } while (depth > 0 && i < s.length)
+      } else if (at("\"\"\"")) {
+        val end = s.indexOf("\"\"\"", i + 3)
+        i = if (end < 0) s.length else end + 3
+        while (i < s.length && s(i) == '"') i += 1
+      } else if (s(i) == '"') skipQuoted('"')
+      else if (s(i) == '\'' && i + 2 < s.length && (s(i + 1) == '\\' || s(i + 2) == '\'')) skipQuoted('\'')
+      else i += 1
+      out.append(if (i == start + 1) s(start) else ' ')
+    }
+    out.toString
+  }
+
+  test("every src/main file has a main or a top-level type another src/main file names") {
+    val topLevel =
+      """(?m)^(?:(?:final|sealed|abstract|case|implicit|private(?:\[\w+\])?)\s+)*(?:object|class|trait)\s+(\w+)""".r
+    val code = mainSources.map(p => p -> codeOnly(Files.readString(p)))
+    val orphans = code.collect {
+      case (p, src) if !src.contains("def main(") &&
+          !topLevel.findAllMatchIn(src).map(_.group(1)).exists { name =>
+            val word = s"\\b$name\\b".r
+            code.exists { case (q, other) => q != p && word.findFirstIn(other).isDefined }
+          } => Paths.get("src/main/scala").relativize(p).toString
+    }
+    assert(orphans.isEmpty, s"no runtime caller: ${orphans.sorted.mkString(", ")}")
+  }
+
   test("every graft main named in the tooling scripts and the verify notes exists") {
     val scripts = {
       val ls = Files.list(Paths.get("tools"))
