@@ -34,50 +34,10 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     pipelineExtract(spark, "/root/testdata/sf0.001")
 
-  /** Library-owned execution defaults, applied when a catalog query is
-    * built (round 6, guide §2.2/§9). `parallelismFirst=false` makes AQE
-    * coalesce post-shuffle partitions to the ADVISORY SIZE rather than
-    * stopping at default parallelism — the documented production posture
-    * (partitions sized by bytes; at real volumes the 64 MB advisory yields
-    * full parallelism anyway, while KB-scale shuffles stop paying for 32
-    * near-empty reduce tasks per exchange). Adjacent-window A/B over the
-    * aggregation-shaped catalog queries: 0.86→0.40 s (join_agg),
-    * 0.43→0.20 (rollup), 7.3→4.5 (warc_rank), 1.42→1.16 (window_rank) —
-    * no query measured slower across repeated runs. Idempotent per call;
-    * result plans only change partition counts, never rows.
-    *
-    * Catalog construction owns `coalescePartitions.parallelismFirst`: the
-    * setting stays on the session after the query is built, so anything run
-    * later on that session inherits the last catalog query's posture. The
-    * driver instruments' sessions are fixed, so the posture cannot move to
-    * session creation.
+  /** One entry per implemented operator from SURVEY.md §2. Builders write no
+    * session conf: AQE sizes every query under the caller's own posture.
     */
-  private def tuned(fn: (SparkSession, String) => DataFrame,
-                    parallelismFirst: Boolean): (SparkSession, String) => DataFrame =
-    (spark, dir) => {
-      // set EITHER way — the conf is session-scoped, so an excluded query
-      // must restore Spark's default rather than inherit the previous
-      // catalog call's setting
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        parallelismFirst.toString)
-      fn(spark, dir)
-    }
-
-  /** Queries excluded from [[tuned]]'s size-based coalescing: their
-    * post-shuffle stages are row-EXPENSIVE at tiny byte volumes (struct
-    * array_sort + pair explode + per-pair cosine over 64-dim vectors), so
-    * coalescing to the advisory size serializes real compute. Adjacent
-    * alternating A/B (4 runs each): q_embed_neardup min 1.17-1.35 s
-    * excluded vs 1.92-2.17 s tuned. Bytes are a proxy for row work only
-    * when rows are cheap — the same boundary as resplitForCpu's minBytes.
-    */
-  private val tunedExcluded = Set("q_embed_neardup")
-
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = rawQueries
-    .map { case (k, fn) => k -> tuned(fn, parallelismFirst = tunedExcluded(k)) }
-
-  private def rawQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // scans / filters / projections (§2.1-2.2)
     "q_scan_prune" -> (Queries.scanPrune(_, _)),
     "q_ci_filter" -> (Queries.ciFilter(_, _)),

@@ -1,6 +1,7 @@
 package graft.jobs
 
 import graft.ops.Queries
+import graft.storage.Lineage
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -65,13 +66,29 @@ object DataPrepJob {
       case other => throw new IllegalArgumentException(s"no stage $other")
     }
 
+  /** The input snapshot id: the relative paths and sizes of the files
+    * under the input dir (a table may be a directory of part files).
+    */
+  private def inputId(sfDir: String): Long = {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get(sfDir)
+    val walk = Files.walk(root)
+    val files =
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => (root.relativize(p).toString, Files.size(p))).toVector.sorted
+      finally walk.close()
+    Lineage.inputId(files.flatMap { case (name, size) => Seq(name, size) }: _*)
+  }
+
   /** One resumable run; returns the number of stages executed (0 = no-op). */
   def run(spark: SparkSession, args: Args): Int = {
     // stats of the written snapshot: its row count and order-insensitive id hash
     val stats = ExtractJob.UnitStats(spans = lit(true), docs = lit(false), errors = lit(false),
       hashed = lit(true), key = col("doc_id").cast("string"))
-    ExtractJob.resumable(spark, args.out, StageNames.indices, groupSize = 1, snapshotId = 0L,
-        args.failAfterStages, failAfterWrite = -1, args.clock) { (group, committed, _) =>
+    ExtractJob.resumable(spark, args.out, StageNames.indices, groupSize = 1,
+        inputId(args.sfDir), args.failAfterStages, failAfterWrite = -1,
+        args.clock) { (group, committed, _) =>
       val idx = group.head
       val in: DataFrame =
         if (idx == 0)

@@ -129,7 +129,9 @@ object ExtractJob {
 
   /** The resume/commit loop of every lineage-tracked job ([[run]],
     * [[WarcIngestJob.run]], [[DataPrepJob.run]]): read the lineage table
-    * once, skip committed units, and per group of `groupSize` units build
+    * once — throwing, before any write, if it was committed from input
+    * other than `snapshotId` ([[Lineage.committed]]) — skip committed
+    * units, and per group of `groupSize` units build
     * the write with `plan` (given the rows committed so far, this run's
     * included, and the run's [[Heartbeat]]), write it with its stats
     * observed in the write's own result stage (no second pass, and no
@@ -149,7 +151,7 @@ object ExtractJob {
       snapshotId: Long, failAfterGroups: Int, failAfterWrite: Int, clock: () => Long)(
       plan: (Seq[Int], collection.Map[Long, LineageRow], Heartbeat) => GroupWrite): Seq[LineageRow] = {
     val committed = collection.mutable.Map.empty[Long, LineageRow] ++
-      Lineage.read(spark, out).collect().map(r => r.partition_id -> r)
+      Lineage.committed(spark, out, snapshotId)
     val fresh = Seq.newBuilder[LineageRow]
     // per-run progress surface (tail -f <out>/progress.jsonl mid-run)
     val heartbeat = new Heartbeat(spark, out).start()
@@ -193,7 +195,10 @@ object ExtractJob {
         coalesce(bit_xor(when(mine && s.hashed, xxhash64(s.key))), lit(0L)).as(s"hash_$u"))
     }
 
-  /** One resumable run. Returns (processedBuckets, processedDocs). */
+  /** One resumable run; its input snapshot id hashes what determines the
+    * bucketed docs (`nDocs`, `seed`, `buckets`). Returns (processedBuckets,
+    * processedDocs).
+    */
   def run(spark: SparkSession, args: Args): (Int, Long) = {
     val buckets = args.buckets
     // Per bucket: every row is a span, each doc contributes exactly its
@@ -201,8 +206,9 @@ object ExtractJob {
     val firstSpan = col("order") === 0
     val stats = UnitStats(spans = lit(true), docs = firstSpan, errors = lit(false),
       hashed = firstSpan, key = col("doc_id"))
-    val rows = resumable(spark, args.out, 0 until buckets, args.groupSize, args.seed,
-        args.failAfterGroups, args.failAfterWrite, args.clock) { (group, _, heartbeat) =>
+    val rows = resumable(spark, args.out, 0 until buckets, args.groupSize,
+        Lineage.inputId(args.nDocs, args.seed, buckets), args.failAfterGroups,
+        args.failAfterWrite, args.clock) { (group, _, heartbeat) =>
       // Each group generates ONLY its own documents: the doc id (and so its
       // bucket) is derivable from the index before the expensive span
       // synthesis runs — the faithful model of a bucket-partition-pruned

@@ -179,9 +179,14 @@ object WarcIngestJob {
     }, fileIdx, name)
   }
 
-  /** One resumable run. Returns (processedFiles, extractedPages, quarantinedPages). */
+  /** One resumable run. Its input snapshot id hashes `seed` and
+    * `pagesPerFile`, which fix every file's bytes, but not `files`: a grow
+    * rerun extends the same crawl. The crawl is materialized once a file is
+    * left to ingest, so a rerun over other input throws before writing.
+    * Returns (processedFiles, extractedPages, quarantinedPages).
+    */
   def run(spark: SparkSession, args: Args): (Int, Long, Long) = {
-    materializeCrawl(spark, args)
+    lazy val crawl = materializeCrawl(spark, args)
     val stats = ExtractJob.UnitStats(
       spans = !col("kind").isin("error", "link", "empty"),
       // zero-span pages count as processed pages via their marker row
@@ -190,7 +195,9 @@ object WarcIngestJob {
       hashed = col("offset") === 0 && col("kind") =!= "link",
       key = col("uri"))
     val rows = ExtractJob.resumable(spark, args.out, 0 until args.files, args.groupSize,
-        args.seed, args.failAfterGroups, failAfterWrite = -1, args.clock) { (group, _, _) =>
+        Lineage.inputId(args.seed, args.pagesPerFile), args.failAfterGroups,
+        failAfterWrite = -1, args.clock) { (group, _, _) =>
+      crawl
       // the scan reads EXACTLY this group's files — path-list pruning
       ExtractJob.GroupWrite(pageRows(spark, group.map(f => filePath(args.out, f))),
         s"${args.out}/data", Some("bucket"), stats)

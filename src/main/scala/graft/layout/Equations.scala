@@ -1,6 +1,6 @@
 package graft.layout
 
-import java.util.regex.{Matcher, Pattern}
+import java.util.regex.Pattern
 import graft.text.PyStr
 
 /** Equation and inline-math content fixes.

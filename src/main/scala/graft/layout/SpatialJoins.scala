@@ -1,6 +1,5 @@
 package graft.layout
 
-import graft.text.PyStr
 import java.util.regex.Pattern
 
 /** Per-document spatial containment joins.

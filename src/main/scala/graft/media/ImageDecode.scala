@@ -196,17 +196,6 @@ object ImageDecode {
     (r, g, b)
   }
 
-  /** `_rotate_image_by_angle` (`_mineru25.py:294-299`): PIL rotate(angle,
-    * expand=True) is COUNTERclockwise; non-{90,180,270} angles are identity.
-    * CCW90 ≡ EXIF orientation 8, 180 ≡ 3, CCW270 ≡ 6.
-    */
-  def rotateByAngle(d: Decoded, angle: Int): Decoded = angle match {
-    case 90 => applyOrientation(d, 8)
-    case 180 => applyOrientation(d, 3)
-    case 270 => applyOrientation(d, 6)
-    case _ => d
-  }
-
   /** `_get_average_color` (`_mineru25.py:318-361`): integer mean of the 8
     * clamped border samples (pad 2) around a box.
     */

@@ -3,7 +3,6 @@ package graft.ops
 import graft.storage.Snapshots
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** IVF ANN with a TRAINED coarse quantizer over a CLUSTERED fixture.
   *

@@ -3,7 +3,7 @@ package graft.pipeline
 import graft.layout._
 import graft.model._
 import graft.text._
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 
 /** The end-to-end per-document span-extraction operator.
   *

@@ -1,7 +1,7 @@
 package graft.storage
 
 import graft.model.LineageRow
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Per-partition lineage/metrics table (north_rule: every stage writes
@@ -59,6 +59,30 @@ object Lineage {
             raw("error_count"), org.apache.spark.sql.functions.lit(0L)))
         .as[LineageRow]
     }
+  }
+
+  /** A run's input snapshot id: a stable 63-bit hash (SHA-256 prefix) of
+    * the values that determine its input, so a rerun over other input
+    * cannot pass for a resume of this one.
+    */
+  def inputId(parts: Any*): Long = {
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(parts.mkString("\u0000").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.nio.ByteBuffer.wrap(digest).getLong & Long.MaxValue
+  }
+
+  /** The rows committed under `root`, by partition id, all of input
+    * snapshot `snapshotId`. A row of another snapshot throws: skipping its
+    * unit as done would keep stale output, and redoing the rest would mix
+    * two inputs in one table.
+    */
+  def committed(spark: SparkSession, root: String, snapshotId: Long): Map[Long, LineageRow] = {
+    val rows = read(spark, root).collect()
+    rows.find(_.snapshot_id != snapshotId).foreach { r =>
+      throw new IllegalStateException(s"${dir(root)} holds input snapshot ${r.snapshot_id}, " +
+        s"this run's input is snapshot $snapshotId: write to another output directory")
+    }
+    rows.map(r => r.partition_id -> r).toMap
   }
 
   /** Buckets already committed — the resume filter is a left-anti join of the

@@ -1,7 +1,7 @@
 package graft.storage
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 /** Snapshot-committed parquet table format.
   *

@@ -19,9 +19,6 @@ object ChatScaffold {
   private val roleTagRe = Pattern.compile(
     "<\\|?(?:assistant|user|system)\\|?>", Pattern.CASE_INSENSITIVE)
 
-  private val outerFencedCodeBlockRe = Pattern.compile(
-    "(?s)^(`{3,}|~{3,})([^\n]*)\n(.*)\n\\1$")
-
   private def firstLineOf(s: String): String = {
     var i = 0
     while (i < s.length) {
@@ -72,13 +69,6 @@ object ChatScaffold {
       }
     }
     PyStr.strip(cleaned)
-  }
-
-  /** `strip_outer_fenced_code_block` — unwrap a single outer ``` / ~~~ fence. */
-  def stripOuterFencedCodeBlock(text: String): String = {
-    val cleaned = PyStr.strip(text)
-    val m = outerFencedCodeBlockRe.matcher(cleaned)
-    if (m.matches()) PyStr.strip(m.group(3)) else cleaned
   }
 
   val Mineru25StopTokens: Seq[String] = Seq("<|im_end|>", "<|endoftext|>")

@@ -1,7 +1,7 @@
 package graft.text
 
 import graft.model.Span
-import HtmlDom.{Elem, Node, Text}
+import HtmlDom.{Elem, Text}
 
 /** DOM-heuristic main-content extraction — the HTML half of the north
   * rule's "HTML boilerplate strip, PDF/layout parse, DOM heuristics"

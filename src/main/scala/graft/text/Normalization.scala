@@ -1,7 +1,7 @@
 package graft.text
 
 import java.text.Normalizer
-import java.util.regex.{Matcher, Pattern}
+import java.util.regex.Pattern
 
 /** Evaluation text normalization.
   *

@@ -1,6 +1,6 @@
 package graft.text
 
-import HtmlDom.{Elem, Node, Text}
+import HtmlDom.{Elem, Text}
 
 /** Page-level METADATA + OUTLINK extraction over a parsed DOM — the other
   * half of what an extraction tier pulls from a crawled page besides the

@@ -34,50 +34,6 @@ object TagStrip {
   }
 }
 
-/** YAML-ish front-matter parsing.
-  *
-  * Semantics from `/root/reference/src/churro_ocr/prompts/ocr.py:125-156`:
-  * a leading `---\n … \n---` block parsed line-wise with null/true/false/int
-  * coercion; everything else is the body.
-  */
-object FrontMatter {
-  sealed trait FmValue
-  case object FmNull extends FmValue
-  final case class FmBool(value: Boolean) extends FmValue
-  final case class FmInt(value: Long) extends FmValue
-  final case class FmStr(value: String) extends FmValue
-
-  private val intRe = Pattern.compile("-?\\d+")
-
-  /** Returns (front-matter key/values in order, body). */
-  def extract(text: String): (Vector[(String, FmValue)], String) = {
-    val stripped = PyStr.strip(text)
-    if (!stripped.startsWith("---\n")) return (Vector.empty, stripped)
-    val endIndex = stripped.indexOf("\n---", 4)
-    if (endIndex == -1) return (Vector.empty, stripped)
-    val block = stripped.substring(4, endIndex)
-    val body = PyStr.strip(stripped.substring(endIndex + 4))
-    val out = Vector.newBuilder[(String, FmValue)]
-    PyStr.splitLines(block).foreach { line =>
-      val colon = line.indexOf(':')
-      if (colon >= 0) {
-        val key = PyStr.strip(line.substring(0, colon))
-        val value = PyStr.strip(line.substring(colon + 1))
-        val lower = PyStr.lower(value)
-        val parsed: FmValue =
-          if (lower == "null") FmNull
-          else if (lower == "true") FmBool(true)
-          else if (lower == "false") FmBool(false)
-          else if (intRe.matcher(value).matches())
-            try FmInt(java.lang.Long.parseLong(value)) catch { case _: NumberFormatException => FmStr(value) }
-          else FmStr(value)
-        out += (key -> parsed)
-      }
-    }
-    (out.result(), body)
-  }
-}
-
 /** Markdown/HTML → plain-text conversion.
   *
   * Ordered regex pipeline from

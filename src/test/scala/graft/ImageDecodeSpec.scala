@@ -81,22 +81,6 @@ class ImageDecodeSpec extends AnyFunSuite {
     assert(px(tr, 0, 1) == px(d, 1, 0))
   }
 
-  test("rotate_image_by_angle: PIL counterclockwise semantics, expand, identity off-angles") {
-    val d = ImageDecode.Decoded(3, 2, pattern(3, 2, 1))
-    def px(img: ImageDecode.Decoded, x: Int, y: Int): Seq[Byte] =
-      img.rgb.slice((y * img.width + x) * 3, (y * img.width + x) * 3 + 3).toSeq
-    val ccw = ImageDecode.rotateByAngle(d, 90) // PIL rotate(90): CCW
-    assert(ccw.width == 2 && ccw.height == 3)
-    // CCW: the right edge becomes the top: src (2,0) -> dst (0,0)
-    assert(px(ccw, 0, 0) == px(d, 2, 0))
-    val r180 = ImageDecode.rotateByAngle(d, 180)
-    assert(px(r180, 0, 0) == px(d, 2, 1))
-    val cw = ImageDecode.rotateByAngle(d, 270) // CCW 270 = CW 90: src (0,0) -> dst (1,0)
-    assert(px(cw, 1, 0) == px(d, 0, 0))
-    assert(ImageDecode.rotateByAngle(d, 45) eq d)
-    assert(ImageDecode.rotateByAngle(d, 0) eq d)
-  }
-
   test("average color: 8 clamped border samples, integer mean; contrast color") {
     // 6x6 image: all gray 100 except a white interior box
     val base = Array.fill(6 * 6 * 3)(100.toByte)

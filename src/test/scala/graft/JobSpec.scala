@@ -101,6 +101,24 @@ class JobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Lineage.read(spark, outA).collect().map(_.doc_count).sum == 400)
   }
 
+  test("rerun over other input (--seed, --docs, --buckets) throws before writing") {
+    val out = tmpDir()
+    val base = ExtractJob.Args(nDocs = 400, buckets = 8, groupSize = 4, out = out, clock = () => 1L)
+    ExtractJob.run(spark, base)
+    val before = JobSpec.outputState(out)
+    val id = Lineage.read(spark, out).first().snapshot_id
+    // pre-fix each rerun skipped every bucket already in lineage, whatever
+    // its input: other seeds/docs kept the stale data, other buckets
+    // re-extracted half the docs into new bucket dirs beside the old ones
+    Seq(base.copy(seed = 7L), base.copy(nDocs = 500L), base.copy(buckets = 16)).foreach { changed =>
+      val e = intercept[IllegalStateException](ExtractJob.run(spark, changed))
+      assert(e.getMessage.contains(s"snapshot $id,") &&
+        e.getMessage.contains(s"this run's input is snapshot "), e.getMessage)
+      assert(JobSpec.outputState(out) == before, s"$changed wrote to $out")
+    }
+    assert(ExtractJob.run(spark, base) == ((0, 0L)), "the same input still resumes")
+  }
+
   test("divergence metric: zero vs an identical run, positive vs a corrupted table") {
     import org.apache.spark.sql.functions._
     val outA = tmpDir()
@@ -206,6 +224,27 @@ class JobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.length == 2)
     assert(rows.map(_.span_count).sum == 300)
     assert(Lineage.committedPartitions(spark, root) == Set(0, 1))
+  }
+
+  test("dataprep rerun over a changed input dir throws before writing") {
+    import graft.jobs.DataPrepJob
+    import org.apache.spark.sql.functions.col
+    val in = tmpDir()
+    def writeCorpus(nDocs: Long): Unit = spark.range(nDocs).select(col("id").as("doc_id"),
+        concat(lit("document "), col("id").cast("string"), lit(" of the corpus")).as("text"),
+        lit("en").as("lang"))
+      .write.mode("overwrite").parquet(s"$in/documents.parquet")
+    writeCorpus(200)
+    val out = tmpDir()
+    val base = DataPrepJob.Args(sfDir = in, out = out, failAfterStages = 1, clock = () => 1L)
+    intercept[RuntimeException](DataPrepJob.run(spark, base)) // stage 0 commits
+    val before = JobSpec.outputState(out)
+    // another corpus under the same table name: pre-fix the rerun resumed
+    // stages 1-5 from the old corpus's stage 0 snapshot
+    writeCorpus(300)
+    val e = intercept[IllegalStateException](DataPrepJob.run(spark, base.copy(failAfterStages = -1)))
+    assert(e.getMessage.contains("this run's input is snapshot"), e.getMessage)
+    assert(JobSpec.outputState(out) == before)
   }
 
   test("dataprep job: kill-resume skips committed stages; final chunks equal the lazy pipeline") {
@@ -441,5 +480,19 @@ class JobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rows = Lineage.read(spark, root).collect()
     assert(rows.length == 1 && rows(0).error_count == 0L)
     assert(Lineage.committedPartitions(spark, root) == Set(0))
+  }
+}
+
+object JobSpec {
+
+  /** Every file under a job's output (but its progress log), with size and
+    * mtime: equal before and after a run iff the run wrote nothing.
+    */
+  def outputState(out: String): Set[(String, Long, Long)] = {
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(java.nio.file.Paths.get(out))
+    try walk.iterator().asScala.filter(p => Files.isRegularFile(p) && !p.endsWith("progress.jsonl"))
+      .map(p => (p.toString, Files.size(p), Files.getLastModifiedTime(p).toMillis)).toSet
+    finally walk.close()
   }
 }

@@ -30,6 +30,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("every catalog query executes, returns a well-formed frame, and leaves no cache residue") {
+    val conf0 = spark.conf.getAll
     SparkEntry.queries.foreach { case (name, fn) =>
       val df = fn(spark, dir)
       val n = df.count()
@@ -50,6 +51,12 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       // registers must be released by releaseCaches
       assert(spark.sparkContext.getPersistentRDDs.isEmpty,
         s"$name left persisted RDDs: ${spark.sparkContext.getPersistentRDDs.keys}")
+      // a catalog query runs under the caller's session posture: building or
+      // running it must not write (or unset) any conf the next query sees
+      val conf = spark.conf.getAll
+      assert(conf == conf0, s"$name changed session conf: " +
+        (conf.toSet diff conf0.toSet).mkString(", ") + " (was: " +
+        (conf0.toSet diff conf.toSet).mkString(", ") + ")")
     }
   }
 

@@ -39,7 +39,6 @@ class ParitySpec extends AnyFunSuite {
   checkString("normalize_characters_nolongs")(Normalization.normalizeCharacters(_, keepLongS = false))
   checkString("normalize_eval")(Normalization.normalizeTextForEvaluation(_))
   checkString("xml_flatten")(XmlFlatten.extractActualTextFromXml)
-  checkString("fenced_block")(ChatScaffold.stripOuterFencedCodeBlock)
   checkString("trim_stop")(ChatScaffold.trimStopStrings(_))
   checkString("otsl")(Otsl.toHtml)
   checkString("wrap_equation")(Equations.wrapEquation)
@@ -60,25 +59,6 @@ class ParitySpec extends AnyFunSuite {
     cases("chat_scaffold").foreach { c =>
       val got = ChatScaffold.stripLeadingChatScaffold(c.get("in").asText(), prompts)
       assert(got == c.get("out").asText(), s"input=${c.get("in").asText()}")
-    }
-  }
-
-  test("parity: front_matter") {
-    cases("front_matter").foreach { c =>
-      val (fm, body) = FrontMatter.extract(c.get("in").asText())
-      assert(body == c.get("body").asText())
-      val expected = c.get("fm")
-      assert(fm.size == expected.size(), s"fm keys: got=${fm.map(_._1)}")
-      fm.foreach { case (k, v) =>
-        val e = expected.get(k)
-        assert(e != null, s"unexpected key $k")
-        v match {
-          case FrontMatter.FmNull => assert(e.isNull)
-          case FrontMatter.FmBool(b) => assert(e.isBoolean && e.asBoolean() == b)
-          case FrontMatter.FmInt(i) => assert(e.isIntegralNumber && e.asLong() == i)
-          case FrontMatter.FmStr(s) => assert(e.isTextual && e.asText() == s)
-        }
-      }
     }
   }
 

@@ -273,6 +273,18 @@ class WarcJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       WarcGen.htmlPageIds(f, Pages).count(WarcGen.isBroken).toLong).sum)
   }
 
+  test("rerun over another crawl (--seed, --pages-per-file) throws before writing") {
+    val out = tmpDir()
+    WarcIngestJob.run(spark, args(out))
+    val before = JobSpec.outputState(out)
+    // pre-fix both reruns were silent no-ops over the other crawl's output
+    Seq(args(out).copy(seed = 7L), args(out).copy(pagesPerFile = Pages + 1)).foreach { changed =>
+      val e = intercept[IllegalStateException](WarcIngestJob.run(spark, changed))
+      assert(e.getMessage.contains("this run's input is snapshot"), e.getMessage)
+      assert(JobSpec.outputState(out) == before, s"$changed wrote to $out")
+    }
+  }
+
   test("grow rerun: a larger --files over a completed output publishes the NEXT snapshot id") {
     val out = tmpDir()
     WarcIngestJob.run(spark, args(out)) // completes, publishes docs/frontier @ seed 42
