@@ -58,7 +58,7 @@ object ExtractJob {
     * instruments `Bench` and `Verify` keep their own fixed sessions). A main
     * that needs a different posture sets it with `spark.conf.set` right
     * after this returns; such settings do not reach sessions cloned with
-    * `newSession()` (see `PlanAudit.staticPlan`).
+    * `newSession()` (see `StreamOps.streamSession`).
     */
   def session(cores: String = DefaultCores): SparkSession = {
     val spark = SparkSession.builder()

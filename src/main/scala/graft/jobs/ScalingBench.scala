@@ -1,23 +1,9 @@
 package graft.jobs
 
-import graft.layout.ExtractConfig
-import graft.model.Doc
-import graft.pipeline.{DocsGen, Extract}
-import org.apache.spark.sql.functions._
-
-/** Two-parallelism scaling-efficiency evidence (north_rule: ≥0.8 throughput
-  * scaling efficiency between N and 4N executors; sandbox proxy is the same
-  * job at `local[N]` pinned to N cores and `local[4N]` pinned to 4N cores on
-  * the same input — see BASELINE.md protocol).
-  *
-  * Shape matches the production job: the docs table is materialized to
-  * parquet ONCE (untimed; it plays the role of the input Iceberg snapshot),
-  * then each timed run does read → extract (narrow mapPartitions) → count
-  * consume. Two untimed warm-ups absorb JIT/codegen; best-of-`repeats` is
-  * reported.
-  *
-  * Run: `sbt "runMain graft.jobs.ScalingBench <cores> <nDocs> <repeats>"`
-  * (pin with `taskset -c 0-<cores-1>` for a faithful N-core proxy).
+/** Host-weather probe for the N-vs-4N scaling protocol (north_rule: ≥0.8
+  * throughput scaling efficiency between N and 4N executors, proxied by
+  * legs pinned to N and 4N cores on the same input — BASELINE.md). The
+  * legs are `graft.jobs.Tier extract <nDocs> <cores>` (tools/scalingbench.sh).
   */
 object ScalingBench {
 
@@ -82,56 +68,11 @@ object ScalingBench {
     counts.get().toDouble * 2 * bytes / elapsedSec / 1e9
   }
 
-  def main(argv: Array[String]): Unit = {
-    if (argv.headOption.contains("probe")) {
-      // probe-only mode: bandwidth at 1..32 copier threads, no Spark
-      Seq(1, 2, 4, 8, 16, 32).foreach { t =>
-        println(f"""{"probe_threads":$t,"gbps":${memBandwidthGbps(t)}%.1f}""")
-      }
-      return
-    }
-    if (argv.headOption.contains("probeonce")) {
-      // one probe line at the given thread count — run in a SEPARATE JVM
-      // before a scaling leg (tools/scalingbench.sh does): measured in-JVM,
-      // the probe's humongous buffers + bus saturation cost the 8-thread
-      // leg ~20% (40.7k docs/s with in-run probes vs 51.6k without, same
-      // window), so the probe must never share the measurement JVM
-      val t = argv(1).toInt
-      println(f"""{"probe_threads":$t,"gbps":${memBandwidthGbps(t)}%.1f}""")
-      return
-    }
-    require(argv.length <= 3,
-      "usage: ScalingBench [<cores> [<nDocs> [<repeats>]]] | probe | probeonce <threads>")
-    val cores = if (argv.length > 0) argv(0) else "8"
-    val nDocs = if (argv.length > 1) argv(1).toLong else 50000L
-    val repeats = if (argv.length > 2) argv(2).toInt else 3
-    val spark = ExtractJob.session(cores)
-    import spark.implicits._
-
-    val input = s"/tmp/graft_bench_docs_$nDocs"
-    if (!new java.io.File(s"$input/_SUCCESS").exists()) {
-      DocsGen.docs(spark, nDocs, seed = 42L, partitions = 256)
-        .write.mode("overwrite").parquet(input)
-    }
-
-    def once(): (Double, Long, Long) = {
-      val t0 = System.nanoTime()
-      val res = Extract.run(spark.read.parquet(input).as[Doc], ExtractConfig.Default)
-        .select(count(lit(1)).as("docs"), sum(size(col("spans"))).as("spans"))
-        .collect()(0)
-      val sec = (System.nanoTime() - t0) / 1e9
-      (sec, res.getLong(0), res.getLong(1))
-    }
-
-    once(); once() // warm-ups (JIT, codegen, parquet footers, page cache)
-    val runs = (1 to repeats).map { i =>
-      val (sec, d, s) = once()
-      println(f"""{"bench":"scaling","cores":$cores,"run":$i,"docs":$d,"spans":$s,"sec":$sec%.3f,"docs_per_sec":${d / sec}%.1f,"spans_per_sec":${s / sec}%.1f}""")
-      sec -> d
-    }
-    val best = runs.map(_._1).min
-    val docs = runs.head._2
-    println(f"""{"bench":"scaling-best","cores":$cores,"docs":$docs,"sec":$best%.3f,"docs_per_sec":${docs / best}%.1f}""")
-    spark.stop()
-  }
+  /** `probe`: 1..32 copier threads. `probeonce <threads>`: one line, run in a SEPARATE
+    * JVM before a scaling leg — in-JVM it cost the 8-thread leg ~20% (40.7k vs 51.6k docs/s). */
+  def main(argv: Array[String]): Unit = (argv match {
+    case Array("probe") => Seq(1, 2, 4, 8, 16, 32)
+    case Array("probeonce", t) => Seq(t.toInt)
+    case _ => throw new IllegalArgumentException("usage: ScalingBench probe | probeonce <threads>")
+  }).foreach(t => println(f"""{"probe_threads":$t,"gbps":${memBandwidthGbps(t)}%.1f}"""))
 }

@@ -1,9 +1,12 @@
 package graft.jobs
 
 import graft.functions.ChurroFunctions
-import graft.layout.GlyphOcr
+import graft.layout.{ExtractConfig, GlyphOcr}
 import graft.media.{GlyphFont, ImageDecode}
+import graft.metrics.Profile
+import graft.model.Doc
 import graft.ops.{AnnKMeans, CacheTracker, Queries}
+import graft.pipeline.{DocsGen, Extract}
 import graft.storage.Snapshots
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -32,6 +35,7 @@ object Tier {
     "bpe" -> ((500000L, bpe _)),
     "crawl" -> ((51200L, crawl _)),
     "dedup" -> ((500000L, dedup _)),
+    "extract" -> ((50000L, extract _)),
     "heavy_hitters" -> ((2000000L, heavyHitters _)),
     "lm" -> ((1000000L, lm _)),
     "ocr" -> ((5000L, ocr _)),
@@ -52,19 +56,9 @@ object Tier {
   /** One tier run of `family` at `rows`; returns its JSON line. */
   def run(spark: SparkSession, family: String, rows: Long): String = {
     val (_, fields) = Families.getOrElse(family, throw new IllegalArgumentException(Usage))
-    json(Seq("tier" -> family, "rows" -> rows, "cores" -> spark.sparkContext.defaultParallelism) ++
+    Profile.json(Seq("tier" -> family, "rows" -> rows, "cores" -> spark.sparkContext.defaultParallelism) ++
       fields(spark, rows))
   }
-
-  private def json(fields: Seq[(String, Any)]): String = fields.map { case (k, v) =>
-    val s = v match {
-      case d: Double => (math.round(d * 10000) / 10000.0).toString
-      case s: String => "\"" + s + "\""
-      case xs: Seq[_] => xs.mkString("[", ",", "]")
-      case other => other.toString
-    }
-    s""""$k":$s"""
-  }.mkString("{", ",", "}")
 
   /** One untimed warm pass (JIT, codegen), then the faster of two timed
     * passes; the two must agree on `key` of their results (timings taken
@@ -397,6 +391,23 @@ object Tier {
       cands.unpersist()
       org.apache.commons.io.FileUtils.deleteDirectory(root)
     }
+  }
+
+  // ---- extraction -------------------------------------------------------------
+
+  /** [[Extract.run]] over seeded [[DocsGen]] docs, 256 partitions at any
+    * core count: the N and 4N legs of tools/scalingbench.sh read one input.
+    */
+  private def extract(spark: SparkSession, rows: Long): Seq[(String, Any)] = {
+    import spark.implicits._
+    val docs = materialized(DocsGen.docs(spark, rows, partitions = 256).toDF())
+    val (sec, r) = timed(Extract.run(docs.as[Doc], ExtractConfig.Default)
+      .agg(count(lit(1)), sum(size(col("spans")))).collect()(0))
+    docs.unpersist()
+    val (n, spans) = (r.getLong(0), r.getLong(1))
+    require(n == rows, s"extracted $n of $rows docs")
+    Seq("docs" -> n, "spans" -> spans, "sec" -> sec, "docs_per_sec" -> n / sec,
+      "spans_per_sec" -> spans / sec)
   }
 
   // ---- crawl ------------------------------------------------------------------

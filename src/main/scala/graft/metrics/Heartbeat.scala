@@ -1,9 +1,7 @@
 package graft.metrics
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.LongAccumulator
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 /** Per-run progress surface — the Spark-native analogue of the reference's
@@ -15,9 +13,8 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   * by one and `rows` by the group's committed `span_count`, so `rows` moves
   * in every job. `docs`/`spans` are extraction counters: executors bump them
   * as documents complete in `Extract.run`, so they stay 0 in jobs that do
-  * not extract. Cluster metrics (completed stages / tasks) come from a
-  * SparkListener, so the surface also moves during shuffle/write phases
-  * that don't touch the row counters.
+  * not extract. Completed stages and ended tasks come from a [[Profile]],
+  * so the surface also moves in shuffle/write phases.
   */
 final class Heartbeat(spark: SparkSession, outDir: String, intervalMs: Long = 1000L) {
 
@@ -26,24 +23,18 @@ final class Heartbeat(spark: SparkSession, outDir: String, intervalMs: Long = 10
   val groupsDone: LongAccumulator = spark.sparkContext.longAccumulator("graft.groups_done")
   val rowsDone: LongAccumulator = spark.sparkContext.longAccumulator("graft.rows_done")
 
-  @volatile private var stages = 0L
-  @volatile private var tasks = 0L
-  private val listener = new SparkListener {
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = stages += 1
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit = tasks += 1
-  }
+  private val profile = new Profile
 
   private val path = Paths.get(s"$outDir/progress.jsonl")
   private val t0 = System.nanoTime()
   @volatile private var running = false
 
   private def tick(): Unit = {
-    val line = s"""{"elapsed_sec":${(System.nanoTime() - t0) / 1e9},""" +
-      s""""docs":${docsDone.value},"spans":${spansDone.value},""" +
-      s""""groups":${groupsDone.value},"rows":${rowsDone.value},""" +
-      s""""stages":$stages,"tasks":$tasks}""" + "\n"
-    Files.write(path, line.getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+    val w = profile.work().toMap
+    val line = Profile.json(Seq("elapsed_sec" -> (System.nanoTime() - t0) / 1e9,
+      "docs" -> docsDone.value, "spans" -> spansDone.value, "groups" -> groupsDone.value,
+      "rows" -> rowsDone.value, "stages" -> w("stages"), "tasks" -> w("tasks"))) + "\n"
+    Files.writeString(path, line, StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
 
   private val thread = new Thread(() => {
@@ -57,7 +48,7 @@ final class Heartbeat(spark: SparkSession, outDir: String, intervalMs: Long = 10
 
   def start(): Heartbeat = {
     Files.createDirectories(Paths.get(outDir))
-    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.addSparkListener(profile)
     running = true
     thread.start()
     this
@@ -67,7 +58,7 @@ final class Heartbeat(spark: SparkSession, outDir: String, intervalMs: Long = 10
   def stop(): Unit = {
     running = false
     thread.interrupt()
-    spark.sparkContext.removeSparkListener(listener)
+    spark.sparkContext.removeSparkListener(profile)
     // stop() runs in callers' finally blocks: an IO failure writing the
     // closing line (out dir removed mid-run) must not REPLACE the real
     // exception that unwound the job

@@ -401,11 +401,12 @@ object Queries {
     // so the planner can never prove the label map broadcastable and plans
     // every round as exchange+sort-merge (AQE recovers broadcast only
     // after materializing the shuffle — still one stage-job per exchange).
-    // We HOLD the measurement the optimizer lacks (guide §8): below ~1M
-    // nodes (≈ tens of MB, well inside broadcast range) hint the label map
-    // onto the build side and the round loses its exchanges; above it the
-    // planner's shuffle join stands.
-    val bcastLabels = 2L * nPairs < 1000000L
+    // We HOLD the measurement the optimizer lacks (guide §8): while the
+    // label map (≤ 2·nPairs nodes × 24 B, as in `parts`) fits the session's
+    // broadcast threshold (> 0), hint it onto the build side and the round
+    // loses its exchanges; else the shuffle join stands. Divided: no overflow.
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val bcastLabels = threshold > 0 && nPairs <= threshold / 48
     def maybeBcast(df: DataFrame): DataFrame = if (bcastLabels) broadcast(df) else df
     val edges = tracked(
       pairs.unionAll(pairs.select(col("b").as("a"), col("a").as("b")))

@@ -23,3 +23,9 @@ object InternalRows {
       .internalCreateDataFrame(rows, df.schema)
   }
 }
+
+/** Waits until the listener bus has delivered every event posted so far
+  * (`waitUntilEmpty` is `private[spark]`), for [[graft.metrics.Profile]]. */
+object ListenerBus {
+  def drain(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}

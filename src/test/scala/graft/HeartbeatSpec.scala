@@ -1,6 +1,7 @@
 package graft
 
 import graft.jobs.{DataPrepJob, ExtractJob, WarcIngestJob}
+import graft.metrics.Profile
 import graft.storage.Lineage
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
@@ -38,8 +39,14 @@ class HeartbeatSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("progress.jsonl: monotone counters, exact closing totals, mid-run stage activity") {
     val out = Files.createTempDirectory("graft_hb").toString
-    ExtractJob.run(spark, ExtractJob.Args(nDocs = 300, buckets = 4, groupSize = 2,
-      out = out, clock = () => 1L))
+    // the run's work is also held to the extract_job line of the work budget
+    val profile = new Profile
+    profile.tagged(spark, "extract_job") {
+      ExtractJob.run(spark, ExtractJob.Args(nDocs = 300, buckets = 4, groupSize = 2,
+        out = out, clock = () => 1L))
+    }
+    val overBudget = WorkBudget.over("extract_job", profile.work(Some("extract_job")))
+    assert(overBudget.isEmpty, overBudget.mkString("\n"))
     val lines = Files.readAllLines(Paths.get(s"$out/progress.jsonl")).asScala
     assert(lines.nonEmpty)
     val docs = lines.map(field(_, "docs"))

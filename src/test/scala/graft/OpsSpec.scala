@@ -1,5 +1,6 @@
 package graft
 
+import graft.metrics.Profile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.scalatest.BeforeAndAfterAll
@@ -31,9 +32,14 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("every catalog query executes, returns a well-formed frame, and leaves no cache residue") {
     val conf0 = spark.conf.getAll
+    // each query's work is tagged with its name and held to its budget
+    val profile = new Profile
+    val overBudget = scala.collection.mutable.Buffer.empty[String]
     SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, dir)
-      val n = df.count()
+      val (df, n) = profile.tagged(spark, name) {
+        val df = fn(spark, dir)
+        (df, df.count())
+      }
       assert(n >= 0, s"$name failed")
       assert(df.columns.nonEmpty, s"$name has no columns")
       // plan-shape guard on the SAME build (the iterative/streaming
@@ -57,7 +63,13 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(conf == conf0, s"$name changed session conf: " +
         (conf.toSet diff conf0.toSet).mkString(", ") + " (was: " +
         (conf0.toSet diff conf.toSet).mkString(", ") + ")")
+      overBudget ++= WorkBudget.over(name, profile.work(Some(name)))
     }
+    assert(overBudget.isEmpty, s"work over budget:\n${overBudget.mkString("\n")}")
+  }
+
+  test("the work budget has one line per catalog query plus extract_job") {
+    assert(WorkBudget.lines.keySet == SparkEntry.queries.keySet + "extract_job")
   }
 
   test("html main-content extraction is a narrow per-row plan: no hash shuffle, no window") {

@@ -3,17 +3,17 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Catalog-wide physical-plan regression gate: the PlanAudit sweep as a
-  * test. Every `SparkEntry.queries` entry is planned (AQE off, so the
-  * static tree is walkable) and checked against an explicit allowlist of
-  * the shapes that become single-task funnels or quadratic blowups at
-  * 100 TB. The per-operator OpsSpec asserts pin a handful of known-fixed
-  * plans; this suite makes the CLASS of regression impossible to
-  * reintroduce anywhere in the catalog without editing the allowlist and
-  * justifying the entry.
+/** Catalog-wide physical-plan regression gate. Every `SparkEntry.queries`
+  * entry is planned (AQE off, so the static tree is walkable) and checked
+  * against an explicit allowlist of the shapes that become single-task
+  * funnels or quadratic blowups at 100 TB. The per-operator OpsSpec asserts
+  * pin a handful of known-fixed plans; this suite makes the CLASS of
+  * regression impossible to reintroduce anywhere in the catalog without
+  * editing the allowlist and justifying the entry.
   *
   *  - `CartesianProduct`: a join that lost its equi-condition AND its
   *    broadcast hint — quadratic work on two distributed sides. Never
@@ -34,7 +34,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     // AQE off: AdaptiveSparkPlanExec hides its tree pre-execution, so the
-    // sweep inspects the static physical plan (same choice as the CLI)
+    // sweep inspects the static physical plan
     .config("spark.sql.adaptive.enabled", "false")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
@@ -43,6 +43,12 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private val sfDir = "/root/testdata/sf0.001"
+
+  /** nodeName counts over the whole tree, with InMemoryTableScan a leaf
+    * (its cached plan executes once, not once per reference).
+    */
+  private def nodeCounts(plan: SparkPlan): Map[String, Int] =
+    plan.collect { case p => p.nodeName }.groupBy(identity).map { case (k, v) => k -> v.size }
 
   /** Per-key Window funnels that are justified: the key scales with the
     * data and rows-per-key are bounded by construction.
@@ -65,8 +71,7 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     val failures = mutable.Buffer.empty[String]
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       val counts =
-        try graft.jobs.PlanAudit.nodeCounts(
-          fn(spark, sfDir).queryExecution.executedPlan)
+        try nodeCounts(fn(spark, sfDir).queryExecution.executedPlan)
         catch {
           case e: Throwable =>
             failures += s"$name: failed to plan — ${e.getClass.getSimpleName}: ${e.getMessage}"

@@ -130,9 +130,18 @@ class SwitchesSpec extends AnyFunSuite {
 
   test("ScalingBench rejects an extra argument with a usage message") {
     val e = intercept[IllegalArgumentException] {
-      graft.jobs.ScalingBench.main(Array("4", "100", "1", "native"))
+      graft.jobs.ScalingBench.main(Array("probeonce", "1", "native"))
     }
     assert(e.getMessage.contains("usage"))
+  }
+
+  test("one profiler: only metrics/Profile.scala subclasses SparkListener or QueryExecutionListener") {
+    val listener = """\b(?:extends|with|new)\s+(?:SparkListener|QueryExecutionListener)\b""".r
+    val owners = mainSources.collect {
+      case p if listener.findFirstIn(codeOnly(Files.readString(p))).isDefined =>
+        Paths.get("src/main/scala/graft").relativize(p).toString
+    }
+    assert(owners == Seq("metrics/Profile.scala"), owners)
   }
 
   test("Tier rejects a fourth argument with a usage message") {

@@ -19,6 +19,7 @@ import scala.jdk.CollectionConverters._
   *  - bpe 500 docs: a vocabulary wide enough for all 10 merge rounds;
   *  - crawl 400 pages: 2 WARC files, one per task;
   *  - dedup and substr 500 docs: ~31 families of 16 near-dup chain members;
+  *  - extract 200 docs over the fixed 256 input partitions;
   *  - lm 500 docs (5 planted gibberish twins) against the fixed 20,000-doc
   *    reference slice;
   *  - rank 2,000 edge draws over 500 hosts; tfidf 500 docs; ocr 40 pages.
@@ -50,6 +51,7 @@ class TierSpec extends AnyFunSuite with BeforeAndAfterAll {
       "spans_per_sec")),
     ("dedup", 500L, Set("docs", "pairs", "pairs_sec", "rounds", "round_ms", "changed",
       "cc_sec", "nodes", "components", "max_component", "total_sec")),
+    ("extract", 200L, Set("docs", "spans", "sec", "docs_per_sec", "spans_per_sec")),
     ("heavy_hitters", 20000L, Set("docs", "instances", "distinct_keys", "exact_sec",
       "sketch_sec", "topk_set_match", "max_abs_err", "eps_bound")),
     ("lm", 500L, Set("docs", "train_docs", "model_bigrams", "plants", "sec", "docs_per_sec")),

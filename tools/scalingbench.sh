@@ -1,6 +1,6 @@
 #!/bin/bash
 # N vs 4N scaling protocol runner (BENCH.md §1).
-# usage: tools/scalingbench.sh <cpuset e.g. 0-7> <cores> <nDocs> <repeats>
+# usage: tools/scalingbench.sh <cpuset e.g. 0-7> <cores> <nDocs>
 # Pinning the whole JVM (worker + GC + JIT threads) to exactly N cores is the
 # faithful N-core-executor proxy; run each leg on an otherwise idle machine.
 set -euo pipefail
@@ -36,7 +36,7 @@ exec taskset -c "$1" java \
   --add-opens java.base/sun.security.action=ALL-UNNAMED --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC -Xmx${HEAP}g -Xms${HEAP}g \
   ${SCALE_GC:--XX:+UseParallelGC} \
-  -cp "$CP" graft.jobs.ScalingBench "$2" "$3" "$4"
+  -cp "$CP" graft.jobs.Tier extract "$3" "$2"
 # ParallelGC default: this stage is pure batch throughput (no pause-time
 # constraint) and G1's concurrent phases compete with the workload for
 # memory bandwidth — interleaved duel at 8 threads: PGC median 45.8k vs
